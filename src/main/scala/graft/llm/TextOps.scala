@@ -1071,8 +1071,9 @@ object TextOps {
         }.toSeq
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
       val m0 = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m0.version + 1, m0.maxB,
-        m0.segs ++ segs, m0.schemaV, m0.schemaJson),
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m0.version + 1, m0.maxB, m0.segs ++ segs, m0.schemaV,
+          m0.schemaJson)),
         "dedup lake ingest commit lost a race")
       // The dedup pipeline reads THE LAKE (not the source files) —
       // losers = every row whose digest has a smaller doc id

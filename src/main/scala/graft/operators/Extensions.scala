@@ -60,8 +60,9 @@ object Extensions {
         .write.mode("overwrite").parquet(s"$dir/seg_b$i")))
     present.foreach { i =>
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i", schemaJson = sj),
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i",
+          schemaJson = sj)),
         s"ingest commit $i lost a race")
     }
   }
@@ -472,8 +473,9 @@ object Extensions {
       val bsegs = m.segs.filter(_.startsWith("seg_b"))
       s.read.schema(ev.schema).parquet(bsegs.map(x => s"$dir/$x"): _*)
         .repartition(2).write.mode("overwrite").parquet(s"$dir/seg_c")
-      require(LakeSink.commitManifest(dir, m.version + 1, m.maxB,
-        m.segs.filterNot(bsegs.contains) :+ "seg_c"),
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, m.maxB,
+          m.segs.filterNot(bsegs.contains) :+ "seg_c")),
         "maintenance commit lost a race")
       bsegs.foreach(x => org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(s"$dir/$x")))
@@ -557,7 +559,8 @@ object Extensions {
     * or a silent fallback to copy-on-write all fail the hash. At
     * 100 TB this is the difference between a GDPR point delete
     * costing O(deleted rows) and costing a full segment rewrite —
-    * DvProbe measures the gap (LakeDvSpec pins the protocol:
+    * DvProbe measured the gap (IMPLEMENTATION.md, "Deleted probes";
+    * LakeDvSpec pins the protocol:
     * supersession, OPTIMIZE apply, vacuum GC, CDC, conflicts). */
   private val sinkLakeDeleteDv = QueryDef(
     "sink_lake_delete_dv",
@@ -652,8 +655,9 @@ object Extensions {
     * a resurrected pre-image, a double-applied assignment, or a
     * silent fallback to copy-on-write all fail the hash. At 100 TB
     * this is the GDPR-rectification shape: a point update costs
-    * O(updated rows), not a segment rewrite — DvProbe measures the
-    * write-amplification gap; LakeDvSpec pins the protocol
+    * O(updated rows), not a segment rewrite — DvProbe measured the
+    * write-amplification gap (IMPLEMENTATION.md, "Deleted probes");
+    * LakeDvSpec pins the protocol
     * (supersession, chained updates hitting the post-image, OPTIMIZE
     * apply, vacuum GC, CDC parity, conflicts). */
   private val sinkLakeUpdateDv = QueryDef(
@@ -1032,7 +1036,8 @@ object Extensions {
       ev.filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("vc"))
         .write.mode("overwrite").parquet(s"$dir/seg_b0")
-      require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")),
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(1L, 0L, Seq("seg_b0"))),
         "evolution ingest commit lost a race")
       val sv = LakeSink.evolveAddColumn(s, dir, "event_type",
         org.apache.spark.sql.types.StringType)
@@ -1740,10 +1745,11 @@ object Extensions {
         val bucket = withB.filter(col("b") === i).drop("b")
         bucket.write.mode("overwrite").parquet(s"$dir/$seg")
         val m = LakeSink.readManifest(dir)
-        require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-          m.segs :+ seg, m.schemaV, m.schemaJson,
-          m.stats + (seg -> LakeSink.segmentStats(
-            s.read.parquet(s"$dir/$seg"), Seq("tse")))),
+        require(LakeSink.commitManifest(dir,
+          LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ seg,
+            m.schemaV, m.schemaJson,
+            m.stats + (seg -> LakeSink.segmentStats(
+              s.read.parquet(s"$dir/$seg"), Seq("tse"))))),
           s"stats ingest commit $i lost a race")
       }
       graft.Concurrency.awaitAll(present.drop(1).map(i => () =>
@@ -1811,10 +1817,11 @@ object Extensions {
         val bucket = withB.filter(col("b") === 0).drop("b")
         bucket.write.mode("overwrite").parquet(s"$dir/$seg")
         val m = LakeSink.readManifest(dir)
-        require(LakeSink.commitManifest(dir, m.version + 1, 0L,
-          m.segs :+ seg, m.schemaV, m.schemaJson,
-          m.stats + (seg -> LakeSink.segmentStats(
-            s.read.parquet(s"$dir/$seg"), Seq("event_type")))),
+        require(LakeSink.commitManifest(dir,
+          LakeSink.Manifest(m.version + 1, 0L, m.segs :+ seg,
+            m.schemaV, m.schemaJson,
+            m.stats + (seg -> LakeSink.segmentStats(
+              s.read.parquet(s"$dir/$seg"), Seq("event_type"))))),
           "string-stats ingest commit 0 lost a race")
       }
       graft.Concurrency.awaitAll((1 to 2).map(i => () =>
@@ -1880,8 +1887,9 @@ object Extensions {
       (0 to 3).foreach { i =>
         if (nonEmpty(i.toLong)) {
           val m = LakeSink.readManifest(dir)
-          require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-            m.segs :+ s"seg_b$i"), s"cf ingest commit $i lost a race")
+          require(LakeSink.commitManifest(dir,
+            LakeSink.Manifest(m.version + 1, i.toLong,
+              m.segs :+ s"seg_b$i")), s"cf ingest commit $i lost a race")
         }
         // Cursor position a consumer checkpointed after the first two
         // ingest rounds (whether or not their buckets had data).
@@ -1933,7 +1941,8 @@ object Extensions {
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1).drop("rk")
       tranche(0).write.mode("overwrite").parquet(s"$dir/seg_b0")
-      require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")),
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(1L, 0L, Seq("seg_b0"))),
         "cdc bootstrap commit lost a race")
       LakeSink.mergeInto(s, dir, tranche(1), Seq("user_id"))
       LakeSink.mergeInto(s, dir, tranche(2), Seq("user_id"))
@@ -1972,7 +1981,8 @@ object Extensions {
         expr("CAST(round(value * 100) AS BIGINT)").as("vc"))
       ev.filter(col("event_id") % 4 === 0)
         .write.mode("overwrite").parquet(s"$dir/seg_b0")
-      require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")),
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(1L, 0L, Seq("seg_b0"))),
         "expectations bootstrap lost a race")
       LakeSink.addExpectation(s, dir, "vc_cap", "vc <= 9000")
       LakeSink.addExpectation(s, dir, "vc_positive", "vc > 0")
@@ -2888,8 +2898,9 @@ object Extensions {
         }.toSeq
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
       val m0 = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m0.version + 1, m0.maxB,
-        m0.segs ++ segs, m0.schemaV, m0.schemaJson),
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m0.version + 1, m0.maxB, m0.segs ++ segs, m0.schemaV,
+          m0.schemaJson)),
         "bloom-prune ingest commit lost a race")
       // the live-table adoption path: declare AFTER the data exists,
       // ANALYZE backfills the sidecars in place (no rewrite) — the

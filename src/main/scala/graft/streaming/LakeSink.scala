@@ -259,15 +259,13 @@ object LakeSink {
   val supportedWriter: Long = 3L
 
   /** Reader generation the given state requires. */
-  private def requiredReader(dv: Map[String, DvRef],
-      colmap: Map[String, String]): Long =
-    if (dv.nonEmpty || colmap.nonEmpty) 2L else 1L
+  private def requiredReader(m: Manifest): Long =
+    if (m.dv.nonEmpty || m.colmap.nonEmpty) 2L else 1L
 
   /** Writer generation the given state requires. */
-  private def requiredWriter(dv: Map[String, DvRef],
-      expects: Map[String, String], copied: Set[String]): Long =
-    if (copied.nonEmpty) 3L
-    else if (dv.nonEmpty || expects.nonEmpty) 2L
+  private def requiredWriter(m: Manifest): Long =
+    if (m.copied.nonEmpty) 3L
+    else if (m.dv.nonEmpty || m.expects.nonEmpty) 2L
     else 1L
 
   /** Loud refusal a reader raises on a manifest from the future. */
@@ -310,146 +308,313 @@ object LakeSink {
       .sorted
   }
 
-  /** Parse one committed manifest file. Header lines (`maxb=`,
-    * `schemav=`, `schema=`, repeated `stats=seg|col|min|max`,
-    * repeated `txn=app|lastBatchId`) precede the segment list; segment
-    * names never contain `=` so the split is unambiguous, and old
-    * manifests without the newer headers parse as schemaV 0 / no
-    * stats / no txns. */
-  private def parseManifest(outDir: String, v: Long): Manifest =
-    parseSnapshotLines(outDir, v, Files.readAllLines(
-      manifestDir(outDir).resolve(f"v$v%010d.txt")).asScala
-      .filter(_.nonEmpty).toSeq)
+  // ---- manifest CODEC ------------------------------------------------
+  /** The manifest format. A version file is UTF-8 text, one fact per
+    * line, `key=payload`; fields inside a payload are `|`-separated.
+    * Two RECORD KINDS share one table of line kinds ([[lineKinds]]):
+    *
+    *  - a SNAPSHOT lists the whole state. Its segments come last, as
+    *    bare lines (no `=`) in order; every other line is what a delta
+    *    against the empty manifest would carry.
+    *  - a DELTA (first line `delta=1`) is an edit of its parent:
+    *    segments arrive as `add=`/`remove=`, per-segment kinds carry
+    *    only entries that are new or changed on live segments, `copy=`
+    *    only new ledger ids, and every other kind restates its value.
+    *
+    * Decoding folds the table over the record, starting from the
+    * parent minus its `remove=` segments (delta) or from the empty
+    * manifest (snapshot). An absent line means the kind's default,
+    * except `schema=` (absent = carried forward) and the cumulative
+    * `copy=`/`minreader=`/`minwriter=`. A scalar kind repeated in one
+    * record, a map entry repeated, a malformed payload and a missing
+    * `maxb=` fail loud; unknown keys are ignored, so a newer writer's
+    * advisory headers stay readable here.
+    *
+    * The GATE column names the protocol minimum a line raises: an
+    * engine that ignored a `reader` line would misread the table, one
+    * that ignored a `writer` line would drop state on its next commit
+    * (see [[supportedReader]]). `-` lines raise nothing.
+    * {{{
+    * key        records   gate        payload
+    * maxb       both      -           highest ingested batchId (required)
+    * schemav    both      -           schema generation, when > 0
+    * schema     both      -           schema JSON, when it or schemav moved
+    * minreader  both      -           max(declared, state's need), when > 1
+    * minwriter  both      -           likewise
+    * datachange both      -           `0`: bytes moved, rows did not
+    * txn        both      -           appId|lastBatchId
+    * expect     both      writer 2    name|sql (the SQL may contain `|`)
+    * colmap     both      reader 2    logical|physical
+    * partspec   both      -           partition columns, comma-separated
+    * bloomcols  both      -           col|col|...
+    * stats      both      -           seg|col|lo|hi|nulls (pre-r11: no nulls)
+    * strstats   both      -           seg|col|b64(lo)|b64(hi)|nulls
+    * part       both      -           seg|col|rows|b64(v)[|col|b64(v)]...
+    *                                  (an empty value is NULL)
+    * segrows    both      -           seg|rows
+    * dvec       both      reader 2,   seg|file|rows
+    *                      writer 2
+    * cdc        both      -           this version's change-data segment
+    * cdcdrop    both      -           segment dropped by partition metadata
+    * copy       both      writer 3    COPY INTO ledger id
+    * (bare)     snapshot  -           live segment, in order
+    * add        delta     -           segment appended after the survivors
+    * remove     delta     -           parent segment no longer live
+    * }}}
+    * The encoder refuses, before any CAS, a value this format cannot
+    * carry: a `|` in a `|`-separated field, a line break anywhere, a
+    * segment name that is empty or contains `=`, and a partition
+    * value `''` (its encoding is NULL's). [[commitNext]] also refuses
+    * an edit a delta cannot express (see there). */
+  private val emptyManifest = Manifest(0L, -1L, Nil)
 
-  /** Decode one stats payload (the part after `stats=`/`strstats=`)
-    * to (seg, col, stat). */
-  private def parseStatPayload(outDir: String, v: Long, l: String,
-      isStr: Boolean): (String, String, ColStat) = {
-    def unb64(s: String): String =
-      new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
-    l.split('|') match {
-      case Array(seg, c, lo, hi) if !isStr => // pre-r11: no null count
-        (seg, c, LongStat(lo.toLong, hi.toLong, -1L))
-      case Array(seg, c, lo, hi, n) =>
-        (seg, c,
-          if (isStr) StrStat(unb64(lo), unb64(hi), n.toLong)
-          else LongStat(lo.toLong, hi.toLong, n.toLong))
-      case _ => sys.error(s"manifest v$v at $outDir: bad stats line $l")
+  /** What one record carries: `m` relative to `parent` (the empty
+    * manifest for a snapshot). */
+  private final case class Edit(parent: Manifest, m: Manifest) {
+    lazy val live: Set[String] = m.segs.toSet
+    lazy val parentSegs: Set[String] = parent.segs.toSet
+    /** Entries of a per-segment map that are new or changed on a live
+      * segment, by segment. */
+    def changed[V](of: Manifest => Map[String, V]): Seq[(String, V)] = {
+      val before = of(parent)
+      of(m).toSeq.filter { case (s, x) =>
+        live(s) && !before.get(s).contains(x) }.sortBy(_._1)
     }
   }
 
-  private def parseSnapshotLines(outDir: String, v: Long,
-      lines0: Seq[String]): Manifest = {
-    val lines = lines0
-    val (headers, segs) = lines.partition(_.contains("="))
-    val (statLines, rest00) = headers.partition(_.startsWith("stats="))
-    val (strStatLines, rest0) = rest00.partition(_.startsWith("strstats="))
-    val (txnLines, rest1) = rest0.partition(_.startsWith("txn="))
-    val (dvLines, rest2) = rest1.partition(_.startsWith("dvec="))
-    val (cmLines, rest3) = rest2.partition(_.startsWith("colmap="))
-    val (partLines, rest4) = rest3.partition(_.startsWith("part="))
-    val (cdcDropLines, rest45) = rest4.partition(_.startsWith("cdcdrop="))
-    val (rowsLines, rest46) = rest45.partition(_.startsWith("segrows="))
-    val (copyLines, rest5) = rest46.partition(_.startsWith("copy="))
-    val (cdcLines, rest) = rest5.partition(_.startsWith("cdc="))
-    val (expectLines, scalarHeaders) = rest.partition(_.startsWith("expect="))
-    val h = scalarHeaders.map { l =>
-      val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-    val maxB = h.getOrElse("maxb",
-      sys.error(s"manifest v$v at $outDir missing maxb header")).toLong
-    val stats =
-      (statLines.map(l =>
-          parseStatPayload(outDir, v, l.stripPrefix("stats="), isStr = false)) ++
-        strStatLines.map(l =>
-          parseStatPayload(outDir, v, l.stripPrefix("strstats="), isStr = true)))
-      .groupBy(_._1)
-      .map { case (seg, rows) =>
-        seg -> rows.map { case (_, c, st) => c -> st }.toMap
-      }
-    val txns = txnLines.map { l =>
-      l.stripPrefix("txn=").split('|') match {
-        case Array(app, id) => app -> id.toLong
-        case _ => sys.error(s"manifest v$v at $outDir: bad txn line $l")
-      }
-    }.toMap
-    // name|sql, split once — the SQL side may itself contain '|'
-    val expects = expectLines.map { l =>
-      l.stripPrefix("expect=").split("\\|", 2) match {
-        case Array(n, sql) => n -> sql
-        case _ => sys.error(s"manifest v$v at $outDir: bad expect line $l")
-      }
-    }.toMap
-    Manifest(v, maxB, segs, h.get("schemav").map(_.toLong).getOrElse(0L),
-      h.get("schema"), stats, txns, expects,
-      cdcLines.map(_.stripPrefix("cdc=")),
-      !h.get("datachange").contains("0"),
-      dvLines.map(l => parseDvPayload(outDir, v, l.stripPrefix("dvec="))).toMap,
-      cmLines.map(l => parseColmapPayload(outDir, v,
-        l.stripPrefix("colmap="))).toMap,
-      h.get("partspec"),
-      partLines.map(l => parsePartPayload(outDir, v,
-        l.stripPrefix("part="))).toMap,
-      cdcDropLines.map(_.stripPrefix("cdcdrop=")),
-      h.get("bloomcols").map(_.split('|').toSeq).getOrElse(Nil),
-      copyLines.map(_.stripPrefix("copy=")).toSet,
-      {
-        val mr = h.get("minreader").map(_.toLong).getOrElse(1L)
-        gateReader(outDir, v, mr)
-        mr
-      },
-      h.get("minwriter").map(_.toLong).getOrElse(1L),
-      rowsLines.map(l => parseSegRowsPayload(outDir, v,
-        l.stripPrefix("segrows="))).toMap)
+  /** One line kind: `enc` renders the lines an edit needs, `dec` folds
+    * one record's `(key, payload)` pairs of this kind into the
+    * manifest being decoded. A `scalar` kind appears at most once. */
+  private final case class LineKind(keys: Seq[String], scalar: Boolean,
+      enc: Edit => Seq[String],
+      dec: (Manifest, Seq[(String, String)]) => Manifest)
+
+  private def scalarKind(key: String)(enc: Edit => Option[String])(
+      dec: (Manifest, Option[String]) => Manifest): LineKind =
+    LineKind(Seq(key), scalar = true, e => enc(e).map(p => s"$key=$p").toSeq,
+      (m, ls) => dec(m, ls.headOption.map(_._2)))
+
+  private def listKind(key: String)(enc: Edit => Seq[String])(
+      dec: (Manifest, Seq[String]) => Manifest): LineKind =
+    LineKind(Seq(key), scalar = false, e => enc(e).map(p => s"$key=$p"),
+      (m, ls) => dec(m, ls.map(_._2)))
+
+  /** `s` as a manifest field: refuses a line break, and any of
+    * `banned` — the characters that would split the field. */
+  private def field(name: String, s: String, banned: String = "|"): String = {
+    require(!s.exists(c => c == '\n' || c == '\r' || banned.indexOf(c) >= 0),
+      s"manifest $name '$s' must not contain a line break" +
+        banned.map(c => s" or '$c'").mkString)
+    s
   }
 
-  /** Decode one segment-rows payload (`seg|rows`). */
-  private def parseSegRowsPayload(outDir: String, v: Long,
-      l: String): (String, Long) = l.split('|') match {
-    case Array(seg, rows) => seg -> rows.toLong
-    case _ => sys.error(s"manifest v$v at $outDir: bad segrows line $l")
+  private def segName(s: String): String = {
+    require(s.nonEmpty, "manifest segment name must be non-empty")
+    field("segment name", s, "=|")
   }
 
-  /** Decode one partition-value payload (`seg|col|rows|b64(value)`
-    * with optional trailing `|col2|b64(value2)…` pairs for composite
-    * specs, r15; an empty value field = NULL partition). */
-  private def parsePartPayload(outDir: String, v: Long,
-      l: String): (String, PartVal) = {
-    def dec(enc: String): Option[String] =
-      if (enc.isEmpty) None
-      else Some(new String(
-        java.util.Base64.getDecoder.decode(enc), "UTF-8"))
-    l.split("\\|", -1) match {
-      case arr if arr.length >= 4 && arr.length % 2 == 0 =>
-        val Array(seg, c, rows, enc) = arr.take(4)
-        seg -> PartVal(c, dec(enc), rows.toLong,
-          arr.drop(4).grouped(2).map {
-            case Array(sc, se) => sc -> dec(se)
-          }.toSeq)
-      case _ => sys.error(s"manifest v$v at $outDir: bad part line $l")
+  private def b64(s: String): String =
+    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
+
+  private def unb64(s: String): String =
+    new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
+
+  /** `p` split into exactly `n` fields (`n` = 0: any count). */
+  private def fields(key: String, p: String, n: Int = 0): Array[String] = {
+    val a = p.split("\\|", -1)
+    if (n > 0 && a.length != n) sys.error(s"bad $key line $p")
+    a
+  }
+
+  /** A decoded map that refuses a repeated key. */
+  private def strictMap[K, V](key: String, kvs: Seq[(K, V)]): Map[K, V] = {
+    val out = kvs.toMap
+    if (out.size != kvs.size) sys.error(s"repeated $key entry")
+    out
+  }
+
+  private def partValue(col: String, v: Option[String]): String =
+    v.fold("") { s =>
+      require(s.nonEmpty, s"manifest partition value of $col is '', " +
+        "which this format cannot tell from NULL")
+      b64(s)
     }
+
+  /** A per-segment kind: carries the live entries that are new or
+    * changed, and decodes onto the surviving ones. */
+  private def segKind[V](key: String, of: Manifest => Map[String, V],
+      set: (Manifest, Map[String, V]) => Manifest)(
+      render: (String, V) => String)(parse: String => (String, V)): LineKind =
+    listKind(key)(_.changed(of).map(render.tupled)) { (m, ps) =>
+      set(m, of(m) ++ strictMap(key, ps.map(parse))) }
+
+  /** A protocol-minimum header: written above 1, raised to what the
+    * state requires; decoding never lowers the parent's value. */
+  private def gateKind(key: String, of: Manifest => Long,
+      required: Manifest => Long, set: (Manifest, Long) => Manifest): LineKind =
+    scalarKind(key) { e =>
+      val g = math.max(of(e.m), required(e.m))
+      Option.when(g > 1L)(g.toString)
+    } { (m, p) => set(m, math.max(of(m), p.fold(1L)(_.toLong))) }
+
+  /** The one table. Decoding folds it in this order (`remove` first,
+    * so every later kind sees the surviving segments); each record
+    * kind renders it in its own historical line order. */
+  private val lineKinds: Seq[LineKind] = Seq(
+    listKind("remove")(e => e.parent.segs.filterNot(e.live).sorted) {
+      (m, rs) => if (rs.isEmpty) m else {
+        val r = rs.toSet
+        m.copy(segs = m.segs.filterNot(r), stats = m.stats -- r,
+          dv = m.dv -- r, parts = m.parts -- r, segRows = m.segRows -- r)
+      }
+    },
+    scalarKind("maxb")(e => Some(e.m.maxB.toString)) { (m, p) =>
+      m.copy(maxB = p.getOrElse(sys.error("missing maxb header")).toLong)
+    },
+    scalarKind("schemav")(e =>
+      Option.when(e.m.schemaV > 0L)(e.m.schemaV.toString)) { (m, p) =>
+      m.copy(schemaV = p.fold(0L)(_.toLong))
+    },
+    scalarKind("schema") { e =>
+      if (e.m.schemaV == e.parent.schemaV &&
+          e.m.schemaJson == e.parent.schemaJson) None
+      else e.m.schemaJson.map(field("schema", _, ""))
+    } { (m, p) => p.fold(m)(j => m.copy(schemaJson = Some(j))) },
+    gateKind("minreader", _.minReader, requiredReader,
+      (m, g) => m.copy(minReader = g)),
+    gateKind("minwriter", _.minWriter, requiredWriter,
+      (m, g) => m.copy(minWriter = g)),
+    scalarKind("datachange")(e => Option.when(!e.m.dataChange)("0")) {
+      (m, p) => m.copy(dataChange = !p.contains("0"))
+    },
+    listKind("txn")(_.m.txns.toSeq.sortBy(_._1).map { case (a, id) =>
+      s"${field("txn app id", a)}|$id" }) { (m, ps) =>
+      m.copy(txns = strictMap("txn", ps.map { p =>
+        val Array(a, id) = fields("txn", p, 2); a -> id.toLong }))
+    },
+    listKind("expect")(_.m.expects.toSeq.sortBy(_._1).map { case (n, q) =>
+      s"${field("expectation name", n)}|${field("expectation SQL", q, "")}"
+    }) { (m, ps) =>
+      m.copy(expects = strictMap("expect", ps.map { p =>
+        p.split("\\|", 2) match {
+          case Array(n, q) => n -> q
+          case _ => sys.error(s"bad expect line $p")
+        } }))
+    },
+    listKind("colmap")(_.m.colmap.toSeq.sortBy(_._1).map { case (l, p) =>
+      s"${field("colmap logical name", l)}|${field("colmap physical name", p)}"
+    }) { (m, ps) =>
+      m.copy(colmap = strictMap("colmap", ps.map { p =>
+        val Array(l, ph) = fields("colmap", p, 2); l -> ph }))
+    },
+    scalarKind("partspec")(_.m.partSpec.map(field("partition spec", _, ""))) {
+      (m, p) => m.copy(partSpec = p)
+    },
+    scalarKind("bloomcols")(e => Option.when(e.m.bloomCols.nonEmpty)(
+      e.m.bloomCols.map(field("bloom column", _)).mkString("|"))) { (m, p) =>
+      m.copy(bloomCols = p.fold(Seq.empty[String])(_.split("\\|", -1).toSeq))
+    },
+    // numeric and string stats are one kind: a record restates a
+    // changed segment's whole per-column map across both keys
+    LineKind(Seq("stats", "strstats"), scalar = false,
+      _.changed(_.stats).flatMap { case (seg, byCol) =>
+        byCol.toSeq.map {
+          case (c, LongStat(lo, hi, n)) =>
+            s"stats=$seg|${field("stats column", c)}|$lo|$hi|$n"
+          case (c, StrStat(lo, hi, n)) => s"strstats=$seg|" +
+            s"${field("stats column", c)}|${b64(lo)}|${b64(hi)}|$n"
+        }
+      }.sorted,
+      (m, ls) => m.copy(stats = m.stats ++ strictMap("stats", ls.map {
+        case (k, p) => fields(k, p) match {
+          case Array(seg, c, lo, hi) if k == "stats" => // pre-r11
+            (seg, c) -> LongStat(lo.toLong, hi.toLong)
+          case Array(seg, c, lo, hi, n) =>
+            (seg, c) -> (if (k == "stats")
+              LongStat(lo.toLong, hi.toLong, n.toLong)
+              else StrStat(unb64(lo), unb64(hi), n.toLong))
+          case _ => sys.error(s"bad $k line $p")
+        }
+      }).groupBy(_._1._1).map { case (seg, xs) =>
+        seg -> xs.map { case ((_, c), st) => c -> st } })),
+    segKind[PartVal]("part", _.parts, (m, x) => m.copy(parts = x)) {
+      (seg, pv) => s"$seg|${field("partition column", pv.col)}|${pv.rows}|" +
+        partValue(pv.col, pv.value) + pv.subs.map { case (c, v) =>
+          s"|${field("partition column", c)}|${partValue(c, v)}" }.mkString
+    } { p =>
+      def dec(enc: String) = Option.when(enc.nonEmpty)(unb64(enc))
+      val a = fields("part", p)
+      if (a.length < 4 || a.length % 2 != 0) sys.error(s"bad part line $p")
+      a(0) -> PartVal(a(1), dec(a(3)), a(2).toLong,
+        a.drop(4).grouped(2).map(sc => sc(0) -> dec(sc(1))).toSeq)
+    },
+    segKind[Long]("segrows", _.segRows, (m, x) => m.copy(segRows = x))(
+      (seg, n) => s"$seg|$n") { p =>
+      val Array(seg, n) = fields("segrows", p, 2); seg -> n.toLong
+    },
+    segKind[DvRef]("dvec", _.dv, (m, x) => m.copy(dv = x))(
+      (seg, r) => s"$seg|${field("dv file", r.file)}|${r.rows}") { p =>
+      val Array(seg, f, n) = fields("dvec", p, 3); seg -> DvRef(f, n.toLong)
+    },
+    listKind("cdc")(_.m.cdcSegs.map(field("cdc segment", _, ""))) {
+      (m, ps) => m.copy(cdcSegs = ps)
+    },
+    listKind("cdcdrop")(_.m.cdcDropSegs.map(field("cdcdrop segment", _, ""))) {
+      (m, ps) => m.copy(cdcDropSegs = ps)
+    },
+    listKind("copy")(e => (e.m.copied -- e.parent.copied).toSeq.sorted
+      .map(field("copy id", _, ""))) { (m, ps) =>
+      m.copy(copied = m.copied ++ ps)
+    },
+    listKind("add")(e => e.m.segs.filterNot(e.parentSegs).map(segName)) {
+      (m, ps) => m.copy(segs = m.segs ++ ps)
+    })
+
+  private def kindsIn(keys: String*): Seq[LineKind] =
+    keys.map(k => lineKinds.find(_.keys.head == k).get)
+
+  private val snapshotOrder = kindsIn("maxb", "schemav", "schema",
+    "minreader", "minwriter", "partspec", "bloomcols", "stats", "txn",
+    "expect", "colmap", "part", "segrows", "dvec", "cdc", "cdcdrop",
+    "datachange", "copy")
+
+  private val deltaOrder = kindsIn("maxb", "schemav", "schema",
+    "minreader", "minwriter", "datachange", "txn", "expect", "colmap",
+    "partspec", "bloomcols", "cdc", "cdcdrop", "dvec", "part", "copy",
+    "segrows", "add", "remove", "stats")
+
+  /** THE encoder: `m` as a delta against `parent`, or as a snapshot
+    * when `parent` is None. */
+  private def encode(parent: Option[Manifest], m: Manifest): Seq[String] = {
+    val e = Edit(parent.getOrElse(emptyManifest), m)
+    if (parent.isDefined) "delta=1" +: deltaOrder.flatMap(_.enc(e))
+    else snapshotOrder.flatMap(_.enc(e)) ++ m.segs.map(segName)
   }
 
-  private def partLine(seg: String, pv: PartVal): String = {
-    def enc(v: Option[String]): String =
-      v.fold("")(s => java.util.Base64.getEncoder
-        .encodeToString(s.getBytes("UTF-8")))
-    s"part=$seg|${pv.col}|${pv.rows}|${enc(pv.value)}" +
-      pv.subs.map { case (c, v) => s"|$c|${enc(v)}" }.mkString
-  }
-
-  /** Decode one column-mapping payload (`logical|physical`). */
-  private def parseColmapPayload(outDir: String, v: Long,
-      l: String): (String, String) = l.split('|') match {
-    case Array(lg, ph) => lg -> ph
-    case _ => sys.error(s"manifest v$v at $outDir: bad colmap line $l")
-  }
-
-  /** Decode one deletion-vector payload (`seg|file|rows`). */
-  private def parseDvPayload(outDir: String, v: Long,
-      l: String): (String, DvRef) = l.split('|') match {
-    case Array(seg, file, rows) => seg -> DvRef(file, rows.toLong)
-    case _ => sys.error(s"manifest v$v at $outDir: bad dvec line $l")
+  /** THE decoder: version `v`'s record, applied to its parent. */
+  private def decodeRecord(outDir: String, v: Long, parent: Manifest,
+      lines: Seq[String]): Manifest = {
+    val delta = isDelta(lines)
+    val m = try {
+      val byKey = lines.drop(if (delta) 1 else 0).map { l =>
+        val i = l.indexOf('=')
+        if (i >= 0) (l.substring(0, i), l.substring(i + 1))
+        else if (delta) sys.error(s"bad line $l")
+        else ("add", l)
+      }.groupBy(_._1)
+      lineKinds.foldLeft((if (delta) parent else emptyManifest)
+          .copy(version = v)) { (acc, k) =>
+        val ls = k.keys.flatMap(byKey.getOrElse(_, Nil))
+        if (k.scalar && ls.size > 1)
+          sys.error(s"repeated ${k.keys.head} header")
+        k.dec(acc, ls)
+      }
+    } catch {
+      case e: RuntimeException => throw new IllegalStateException(
+        s"manifest v$v at $outDir: ${e.getMessage}", e)
+    }
+    gateReader(outDir, v, m.minReader)
+    m
   }
 
   // ---- manifest LOG: delta records + periodic checkpoints ------------
@@ -457,12 +622,12 @@ object LakeSink {
   // and O(segments) per tip read — at millions of segments/commits the
   // cumulative write volume is quadratic, the failure mode Delta/Iceberg
   // solve with an incremental log + periodic checkpoint. Same here:
-  // most version files are small DELTA records (the segments this
-  // commit added/removed plus the compact scalar state), and every
+  // most version files are small DELTA records, and every
   // [[snapshotInterval]]-th version is a full SNAPSHOT. Reconstruction
   // walks back ≤ interval files to the nearest snapshot and replays
-  // forward — commit cost O(edit), tip-read O(segments + interval·edit),
-  // cumulative manifest bytes O(commits·edit + commits·segments/interval).
+  // forward — commit bytes O(edit), tip-read O(segments + interval·edit),
+  // cumulative manifest bytes O(commits·edit + commits·segments/interval)
+  // (measured by ManifestScaleProbe: IMPLEMENTATION.md, "Deleted probes").
   // The CAS is untouched: one hard-linked file per version, whatever its
   // kind, so racing writers still serialize per version; mixed chains
   // (external tools committing full snapshots via [[commitManifest]])
@@ -472,92 +637,6 @@ object LakeSink {
     * bounds walk-back reads at 32 small files while keeping snapshot
     * write amplification to segments/32 per commit on average. */
   val snapshotInterval: Int = 32
-
-  /** One committed version file: a full snapshot, or a delta against
-    * its immediate parent. Scalar state (maxB, txns, expects, schemaV)
-    * is stored in full on every record — it is compact; only the
-    * O(segments) parts (segment list, per-segment stats) are
-    * differential. `schemaJson` is written only when the generation
-    * changed; reconstruction carries it forward otherwise. */
-  private final case class DeltaRec(version: Long, maxB: Long,
-      adds: Seq[String], removes: Set[String],
-      addStats: Map[String, Map[String, ColStat]],
-      schemaV: Long, schemaJson: Option[String],
-      txns: Map[String, Long], expects: Map[String, String],
-      cdcSegs: Seq[String], dataChange: Boolean,
-      dvSets: Map[String, DvRef], colmap: Map[String, String],
-      partSpec: Option[String], addParts: Map[String, PartVal],
-      cdcDropSegs: Seq[String], bloomCols: Seq[String],
-      addCopied: Set[String], minReader: Long, minWriter: Long,
-      addRows: Map[String, Long])
-
-  private def parseDelta(outDir: String, v: Long,
-      lines: Seq[String]): DeltaRec = {
-    val h = scala.collection.mutable.Map.empty[String, String]
-    val adds = Seq.newBuilder[String]
-    val removes = Set.newBuilder[String]
-    val statLines = Seq.newBuilder[(String, String, ColStat)]
-    val txns = Map.newBuilder[String, Long]
-    val expects = Map.newBuilder[String, String]
-    val cdcSegs = Seq.newBuilder[String]
-    val dvSets = Map.newBuilder[String, DvRef]
-    val colmap = Map.newBuilder[String, String]
-    val addParts = Map.newBuilder[String, PartVal]
-    val cdcDropSegs = Seq.newBuilder[String]
-    val addCopied = Set.newBuilder[String]
-    val addRows = Map.newBuilder[String, Long]
-    lines.foreach { l =>
-      val i = l.indexOf('=')
-      require(i > 0, s"manifest delta v$v at $outDir: bad line $l")
-      val (k, value) = (l.substring(0, i), l.substring(i + 1))
-      k match {
-        case "delta" =>
-        case "add" => adds += value
-        case "remove" => removes += value
-        case "cdc" => cdcSegs += value
-        case "cdcdrop" => cdcDropSegs += value
-        case "copy" => addCopied += value
-        case "dvec" => dvSets += parseDvPayload(outDir, v, value)
-        case "colmap" => colmap += parseColmapPayload(outDir, v, value)
-        case "part" => addParts += parsePartPayload(outDir, v, value)
-        case "segrows" => addRows += parseSegRowsPayload(outDir, v, value)
-        case "stats" =>
-          statLines += parseStatPayload(outDir, v, value, isStr = false)
-        case "strstats" =>
-          statLines += parseStatPayload(outDir, v, value, isStr = true)
-        case "txn" => value.split('|') match {
-          case Array(app, id) => txns += app -> id.toLong
-          case _ => sys.error(s"manifest delta v$v at $outDir: bad txn line $l")
-        }
-        case "expect" => value.split("\\|", 2) match {
-          case Array(n, sql) => expects += n -> sql
-          case _ => sys.error(s"manifest delta v$v at $outDir: bad expect line $l")
-        }
-        case other => h(other) = value
-      }
-    }
-    val addStats = statLines.result().groupBy(_._1).map { case (seg, rows) =>
-      seg -> rows.map { case (_, c, st) => c -> st }.toMap
-    }
-    DeltaRec(v,
-      h.getOrElse("maxb",
-        sys.error(s"manifest delta v$v at $outDir missing maxb")).toLong,
-      adds.result(), removes.result(), addStats,
-      h.get("schemav").map(_.toLong).getOrElse(0L), h.get("schema"),
-      txns.result(), expects.result(), cdcSegs.result(),
-      !h.get("datachange").contains("0"), dvSets.result(),
-      colmap.result(), h.get("partspec"), addParts.result(),
-      cdcDropSegs.result(),
-      h.get("bloomcols").map(_.split('|').toSeq).getOrElse(Nil),
-      addCopied.result(),
-      {
-        val mr = h.get("minreader").map(_.toLong).getOrElse(1L)
-        gateReader(outDir, v, mr)
-        mr
-      },
-      h.get("minwriter").map(_.toLong).getOrElse(1L),
-      addRows.result())
-  }
 
   /** Auxiliary CHECKPOINT file for version `v` (Delta's
     * `.checkpoint` move): same snapshot format as a full manifest,
@@ -569,109 +648,79 @@ object LakeSink {
   private def snapPath(outDir: String, v: Long): Path =
     manifestDir(outDir).resolve(f"v$v%010d.snap")
 
-  /** Parse version `v` as whichever kind it is. A `.snap` checkpoint,
-    * when present, short-circuits the walk-back (it IS the
-    * reconstructed state). */
-  private def parseVersionFile(outDir: String,
-      v: Long): Either[DeltaRec, Manifest] = {
+  /** Version `v`'s record lines. A `.snap` checkpoint, when present,
+    * stands in for the version file (it IS the reconstructed state, so
+    * it short-circuits the walk-back). */
+  private def versionLines(outDir: String, v: Long): Seq[String] = {
     val snap = snapPath(outDir, v)
-    if (Files.exists(snap))
-      return Right(parseSnapshotLines(outDir, v,
-        Files.readAllLines(snap).asScala.filter(_.nonEmpty).toSeq))
-    val lines = Files.readAllLines(
-      manifestDir(outDir).resolve(f"v$v%010d.txt")).asScala
-      .filter(_.nonEmpty).toSeq
-    if (lines.headOption.contains("delta=1"))
-      Left(parseDelta(outDir, v, lines))
-    else Right(parseSnapshotLines(outDir, v, lines))
+    Files.readAllLines(if (Files.exists(snap)) snap
+      else manifestDir(outDir).resolve(f"v$v%010d.txt"))
+      .asScala.filter(_.nonEmpty).toSeq
   }
 
-  private def applyDelta(acc: Manifest, d: DeltaRec): Manifest =
-    Manifest(d.version, d.maxB,
-      acc.segs.filterNot(d.removes) ++ d.adds,
-      d.schemaV,
-      if (d.schemaV != acc.schemaV) d.schemaJson else acc.schemaJson,
-      (acc.stats -- d.removes) ++ d.addStats,
-      d.txns, d.expects, d.cdcSegs, d.dataChange,
-      (acc.dv -- d.removes) ++ d.dvSets, d.colmap, d.partSpec,
-      (acc.parts -- d.removes) ++ d.addParts, d.cdcDropSegs,
-      d.bloomCols,
-      acc.copied ++ d.addCopied,
-      // never auto-downgrade along a delta chain (Delta's rule): a
-      // purge that empties dv does not re-admit old readers mid-log
-      math.max(acc.minReader, d.minReader),
-      math.max(acc.minWriter, d.minWriter),
-      (acc.segRows -- d.removes) ++ d.addRows)
+  private def isDelta(lines: Seq[String]): Boolean =
+    lines.headOption.contains("delta=1")
+
+  /** Version `v` given the state at `v - 1`. */
+  private def nextManifest(outDir: String, v: Long, prev: Manifest): Manifest =
+    decodeRecord(outDir, v, prev, versionLines(outDir, v))
 
   /** Reconstruct the committed state at version `v`: walk back to the
     * nearest snapshot (≤ [[snapshotInterval]] small files, or the
     * implicit empty v0), replay deltas forward. */
   private[graft] def manifestAt(outDir: String, v: Long): Manifest = {
-    if (v == 0L) return Manifest(0L, -1L, Nil)
-    var deltas = List.empty[DeltaRec]
+    var chain = List.empty[(Long, Seq[String])]
     var cur = v
-    var base: Manifest = null
-    while (base == null) {
-      if (cur == 0L) base = Manifest(0L, -1L, Nil)
-      else parseVersionFile(outDir, cur) match {
-        case Right(m) => base = m
-        case Left(d) => deltas ::= d; cur -= 1
-      }
+    while (cur > 0L && chain.headOption.forall(r => isDelta(r._2))) {
+      chain ::= cur -> versionLines(outDir, cur)
+      cur -= 1
     }
-    deltas.foldLeft(base)(applyDelta)
+    chain.foldLeft(emptyManifest) { case (acc, (ver, lines)) =>
+      decodeRecord(outDir, ver, acc, lines) }
   }
 
   /** Highest committed manifest. Version 0 = empty lake. */
-  def readManifest(outDir: String): Manifest = {
-    val versions = manifestVersions(outDir)
-    if (versions.isEmpty) Manifest(0L, -1L, Nil)
-    else manifestAt(outDir, versions.max)
-  }
+  def readManifest(outDir: String): Manifest =
+    manifestVersions(outDir).lastOption
+      .fold(emptyManifest)(manifestAt(outDir, _))
 
-  /** Commit `m` (= parent.version + 1) through the manifest LOG:
-    * a delta record against `parent` normally, a full snapshot on
-    * every [[snapshotInterval]]-th version. Same CAS semantics as
-    * [[commitManifest]] (false = version already taken). This is the
-    * committer every internal writer uses; [[commitManifest]] remains
-    * the always-snapshot primitive for callers without the parent in
-    * hand. */
+  /** Commit `m` (= parent.version + 1) through the manifest LOG: a
+    * delta record against `parent` normally, a full snapshot on every
+    * [[snapshotInterval]]-th version. Same CAS semantics as
+    * [[commitManifest]] (false = version already taken). Every
+    * internal writer commits here; [[commitManifest]] remains the
+    * always-snapshot primitive for callers without the parent in hand.
+    *
+    * Before the CAS it records each added segment's row count (below),
+    * keeps the parent's gate minimums (never-downgrade, whichever
+    * record kind lands), and refuses an edit a delta cannot express,
+    * whichever record kind lands: a per-segment stats/dv/part/segrows
+    * entry dropped while its segment stays live, surviving segments
+    * reordered or added ones placed before them, a recorded schema
+    * cleared, and a COPY INTO ledger id dropped. */
   def commitNext(outDir: String, parent: Manifest, m: Manifest): Boolean = {
-    val parentSegs = parent.segs.toSet
-    val liveSet = m.segs.toSet
-    val adds = m.segs.filterNot(parentSegs)
-    val removes = parent.segs.filterNot(liveSet).toSet
-    // differential stats: entries new or changed vs the parent (live
-    // segments only — commitManifest applies the same liveness rule)
-    val addStats = m.stats.filter { case (seg, st) =>
-      liveSet(seg) && !parent.stats.get(seg).contains(st) }
-    val dvSets = m.dv.filter { case (seg, r) =>
-      liveSet(seg) && !parent.dv.get(seg).contains(r) }
-    val addParts = m.parts.filter { case (seg, p) =>
-      liveSet(seg) && !parent.parts.get(seg).contains(p) }
-    commitEditRecord(outDir, parent, m, removes, adds, addStats, dvSets,
-      addParts, m.copied -- parent.copied)
-  }
-
-  /** [[commitNext]] for a caller that already KNOWS its edit (the DML
-    * retry loop, the ingest sink): skips the O(segments) parent/next
-    * diff, so a delta commit's cost is O(edit) — the property the log
-    * exists for (measured: ManifestScaleProbe). The caller contract is
-    * that `m` = `parent` minus `removed` plus `added` with `addedStats`
-    * the only stats changes; [[commitNext]] is the checked general
-    * path that derives the edit instead of trusting it. */
-  def commitEditRecord(outDir: String, parent: Manifest, m: Manifest,
-      removed: Set[String], added: Seq[String],
-      addedStats: Map[String, Map[String, ColStat]],
-      dvSets: Map[String, DvRef] = Map.empty,
-      addedParts: Map[String, PartVal] = Map.empty,
-      addedCopied: Set[String] = Set.empty): Boolean = {
     require(m.version == parent.version + 1,
       s"commit needs consecutive versions, got parent " +
         s"v${parent.version} -> v${m.version}")
     gateWriter(outDir, parent)
-    val mr = math.max(parent.minReader, requiredReader(m.dv, m.colmap))
-    val mw = math.max(parent.minWriter,
-      requiredWriter(m.dv, m.expects, m.copied))
+    val e = Edit(parent, m)
+    val added = m.segs.filterNot(e.parentSegs)
+    require(m.segs == parent.segs.filter(e.live) ++ added,
+      s"commit v${m.version} at $outDir reorders the parent's segments " +
+        "(a delta appends after the survivors)")
+    require(m.schemaJson.isDefined || parent.schemaJson.isEmpty,
+      s"commit v${m.version} at $outDir clears the recorded schema")
+    require(parent.copied.subsetOf(m.copied),
+      s"commit v${m.version} at $outDir drops COPY INTO ledger ids")
+    Seq[(String, Manifest => Map[String, _])]("stats" -> (_.stats),
+        "dv" -> (_.dv), "part" -> (_.parts), "segrows" -> (_.segRows))
+      .foreach { case (name, of) =>
+        val now = of(m)
+        of(parent).keysIterator.find(s => e.live(s) && !now.contains(s))
+          .foreach(s => throw new IllegalArgumentException(
+            s"commit v${m.version} at $outDir drops the $name entry of " +
+              s"live segment $s"))
+      }
     // SEGMENT ROW COUNTS (r17): record each ADDED segment's physical
     // row count once, here — the one gate every committed segment
     // passes through. Priority: a count the caller already carries
@@ -683,70 +732,30 @@ object LakeSink {
     // a segment whose directory is not readable here (external
     // tooling committing names it never materialized) simply records
     // nothing and readers fall back to footers.
-    val rowsForAdded: Map[String, Long] = added.flatMap { s =>
+    val rows = added.flatMap { s =>
       m.segRows.get(s).orElse(m.parts.get(s).map(_.rows))
         .orElse(try Some(segmentFooterRows(outDir, s))
                 catch { case _: Exception => None })
         .map(s -> _)
-    }.toMap
-    val mRows = m.copy(segRows =
-      (m.segRows -- removed) ++ rowsForAdded)
-    if (m.version % snapshotInterval == 0)
-      // the snapshot must carry the parent's declared minimums too
-      // (r16): a full snapshot that re-derived them from state alone
-      // would DOWNGRADE a chain whose mins were raised by a feature
-      // this engine can't see — the delta path's never-downgrade rule
-      // applies to every record kind
-      return commitManifest(outDir, m.version, m.maxB, m.segs, m.schemaV,
-        m.schemaJson, m.stats, m.txns, m.expects, m.cdcSegs, m.dataChange,
-        m.dv, m.colmap, m.partSpec, m.parts, m.cdcDropSegs, m.bloomCols,
-        m.copied, minReaderFloor = mr, minWriterFloor = mw,
-        segRows = mRows.segRows)
-    val lines = Seq("delta=1", s"maxb=${m.maxB}") ++
-      (if (m.schemaV > 0L) Seq(s"schemav=${m.schemaV}") else Nil) ++
-      (if (m.schemaV != parent.schemaV) m.schemaJson.map(j => s"schema=$j")
-       else None) ++
-      (if (mr > 1L) Seq(s"minreader=$mr") else Nil) ++
-      (if (mw > 1L) Seq(s"minwriter=$mw") else Nil) ++
-      (if (m.dataChange) Nil else Seq("datachange=0")) ++
-      m.txns.toSeq.sorted.map { case (a, id) => s"txn=$a|$id" } ++
-      m.expects.toSeq.sorted.map { case (n, q) => s"expect=$n|$q" } ++
-      m.colmap.toSeq.sorted.map { case (lg, ph) => s"colmap=$lg|$ph" } ++
-      m.partSpec.map(c => s"partspec=$c") ++
-      (if (m.bloomCols.nonEmpty)
-        Seq(s"bloomcols=${m.bloomCols.mkString("|")}") else Nil) ++
-      m.cdcSegs.map(s => s"cdc=$s") ++
-      m.cdcDropSegs.map(s => s"cdcdrop=$s") ++
-      dvSets.toSeq.sortBy(_._1).map { case (seg, r) =>
-        s"dvec=$seg|${r.file}|${r.rows}" } ++
-      addedParts.toSeq.sortBy(_._1).map { case (seg, p) =>
-        partLine(seg, p) } ++
-      addedCopied.toSeq.sorted.map(id => s"copy=$id") ++
-      rowsForAdded.toSeq.sortBy(_._1).map { case (seg, n) =>
-        s"segrows=$seg|$n" } ++
-      added.map(s => s"add=$s") ++
-      removed.toSeq.sorted.map(s => s"remove=$s") ++
-      addedStats.toSeq.flatMap { case (seg, byCol) =>
-        byCol.toSeq.map { case (c, st) => statLine(seg, c, st) }
-      }.sorted
-    val md = manifestDir(outDir)
-    Files.createDirectories(md)
-    val tmp = Files.createTempFile(md, s"tmp_v${m.version}-", ".inprogress")
-    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    try {
-      Files.createLink(md.resolve(f"v${m.version}%010d.txt"), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally {
-      Files.deleteIfExists(tmp)
     }
+    val next = m.copy(segRows = m.segRows ++ rows,
+      minReader = math.max(parent.minReader, m.minReader),
+      minWriter = math.max(parent.minWriter, m.minWriter))
+    publish(outDir, m.version, encode(
+      if (m.version % snapshotInterval == 0) None else Some(parent), next))
   }
 
-  /** Publish manifest version `v` atomically with FAIL-IF-EXISTS
-    * semantics (write temp + hard-link to the final name). Returns
-    * false if `v` is already committed — the replay/lost-race case;
-    * the caller re-reads and decides.
+  /** Publish manifest version `m.version` as a full snapshot. Returns
+    * false if that version is already committed — the replay/lost-race
+    * case; the caller re-reads and decides. The snapshot's gate
+    * headers are `m.minReader`/`m.minWriter`, raised to what its state
+    * requires: RESTORE, CLONE and checkpoints pass the chain's declared
+    * minimums so a re-derived snapshot never downgrades them (r16). */
+  def commitManifest(outDir: String, m: Manifest): Boolean =
+    publish(outDir, m.version, encode(None, m))
+
+  /** Atomic FAIL-IF-EXISTS publish of version `v` (write temp +
+    * hard-link to the final name).
     *
     * NOT a rename: `Files.move(…, ATOMIC_MOVE)` maps to rename(2),
     * which silently REPLACES an existing target on POSIX — the method
@@ -755,31 +764,11 @@ object LakeSink {
     * link(2), which fails with EEXIST, giving a true compare-and-set.
     * On an object store this becomes the conditional put / if-none-
     * match primitive. */
-  def commitManifest(outDir: String, v: Long, maxB: Long,
-      segs: Seq[String], schemaV: Long = 0L,
-      schemaJson: Option[String] = None,
-      stats: Map[String, Map[String, ColStat]] = Map.empty,
-      txns: Map[String, Long] = Map.empty,
-      expects: Map[String, String] = Map.empty,
-      cdcSegs: Seq[String] = Nil, dataChange: Boolean = true,
-      dv: Map[String, DvRef] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      partSpec: Option[String] = None,
-      parts: Map[String, PartVal] = Map.empty,
-      cdcDropSegs: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil,
-      copied: Set[String] = Set.empty,
-      minReaderFloor: Long = 1L,
-      minWriterFloor: Long = 1L,
-      segRows: Map[String, Long] = Map.empty): Boolean = {
+  private def publish(outDir: String, v: Long, lines: Seq[String]): Boolean = {
     val md = manifestDir(outDir)
     Files.createDirectories(md)
     val tmp = Files.createTempFile(md, s"tmp_v$v-", ".inprogress")
-    Files.write(tmp, snapshotLines(maxB, segs, schemaV, schemaJson,
-      stats, txns, expects, cdcSegs, dataChange, dv, colmap, partSpec,
-      parts, cdcDropSegs, bloomCols, copied,
-      minReaderFloor, minWriterFloor, segRows).mkString("\n")
-      .getBytes("UTF-8"))
+    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
     try {
       Files.createLink(md.resolve(f"v$v%010d.txt"), tmp)
       true
@@ -788,88 +777,6 @@ object LakeSink {
     } finally {
       Files.deleteIfExists(tmp)
     }
-  }
-
-  /** One serialized stats line. Numeric: `stats=seg|c|lo|hi|nulls`
-    * (the pre-r11 4-field form parses back with nulls = -1 unknown).
-    * String: `strstats=seg|c|b64(lo)|b64(hi)|nulls` — base64 keeps
-    * arbitrary string bounds (pipes, newlines, unicode) inside the
-    * line-oriented format. */
-  private def statLine(seg: String, c: String, st: ColStat): String = {
-    def b64(s: String): String = java.util.Base64.getEncoder
-      .encodeToString(s.getBytes("UTF-8"))
-    st match {
-      case LongStat(lo, hi, n) => s"stats=$seg|$c|$lo|$hi|$n"
-      case StrStat(lo, hi, n) => s"strstats=$seg|$c|${b64(lo)}|${b64(hi)}|$n"
-    }
-  }
-
-  /** Full-snapshot serialization (deterministic bytes for a given
-    * logical state — stats/txn/expect lines sorted, segment order
-    * preserved). Stats only for segments the version lists; set
-    * membership, not Seq.contains — a linear scan per stats entry is
-    * O(S²) per commit, at odds with the million-segment design. */
-  private def snapshotLines(maxB: Long, segs: Seq[String], schemaV: Long,
-      schemaJson: Option[String],
-      stats: Map[String, Map[String, ColStat]],
-      txns: Map[String, Long], expects: Map[String, String],
-      cdcSegs: Seq[String] = Nil,
-      dataChange: Boolean = true,
-      dv: Map[String, DvRef] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      partSpec: Option[String] = None,
-      parts: Map[String, PartVal] = Map.empty,
-      cdcDropSegs: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil,
-      copied: Set[String] = Set.empty,
-      minReaderFloor: Long = 1L,
-      minWriterFloor: Long = 1L,
-      segRows: Map[String, Long] = Map.empty): Seq[String] = {
-    val live = segs.toSet
-    val statLines = stats.toSeq
-      .filter { case (seg, _) => live(seg) }
-      .flatMap { case (seg, byCol) =>
-        byCol.toSeq.map { case (c, st) => statLine(seg, c, st) }
-      }.sorted
-    val txnLines = txns.toSeq.sorted.map { case (a, id) => s"txn=$a|$id" }
-    val expectLines =
-      expects.toSeq.sorted.map { case (n, q) => s"expect=$n|$q" }
-    val dvLines = dv.toSeq.filter { case (seg, _) => live(seg) }
-      .sortBy(_._1).map { case (seg, r) => s"dvec=$seg|${r.file}|${r.rows}" }
-    val cmLines =
-      colmap.toSeq.sorted.map { case (lg, ph) => s"colmap=$lg|$ph" }
-    val partLines = parts.toSeq.filter { case (seg, _) => live(seg) }
-      .sortBy(_._1).map { case (seg, p) => partLine(seg, p) }
-    val rowsLines = segRows.toSeq.filter { case (seg, _) => live(seg) }
-      .sortBy(_._1).map { case (seg, n) => s"segrows=$seg|$n" }
-    val cdcLines = cdcSegs.map(s => s"cdc=$s") ++
-      cdcDropSegs.map(s => s"cdcdrop=$s") ++
-      (if (dataChange) Nil else Seq("datachange=0"))
-    val bloomLine =
-      if (bloomCols.nonEmpty) Seq(s"bloomcols=${bloomCols.mkString("|")}")
-      else Nil
-    val copyLines = copied.toSeq.sorted.map(id => s"copy=$id")
-    // protocol gate headers: max of the state's requirements and the
-    // caller's floor — the parent chain's declared minimums (r16,
-    // never-downgrade: a snapshot/checkpoint/RESTORE/CLONE re-deriving
-    // from state alone would silently re-admit writers the chain had
-    // fenced out). Emitted only above the baseline — pre-gate
-    // manifests stay byte-identical.
-    val mr = math.max(minReaderFloor, requiredReader(dv, colmap))
-    val mw = math.max(minWriterFloor, requiredWriter(dv, expects, copied))
-    val gateLines =
-      (if (mr > 1L) Seq(s"minreader=$mr") else Nil) ++
-      (if (mw > 1L) Seq(s"minwriter=$mw") else Nil)
-    // schema= is emitted whenever a schema is known (r19, advisor):
-    // a bootstrap-recorded schema (schemaV 0 — recording it is not an
-    // evolution) must persist, or every downstream read of the table
-    // pays footer inference; readManifest parses it unconditionally.
-    (s"maxb=$maxB" +:
-      ((if (schemaV > 0L) Seq(s"schemav=$schemaV") else Nil) ++
-        schemaJson.map(j => s"schema=$j").toSeq ++ gateLines ++
-        partSpec.map(c => s"partspec=$c").toSeq ++ bloomLine ++
-        statLines ++ txnLines ++ expectLines ++ cmLines ++
-        partLines ++ rowsLines ++ dvLines ++ cdcLines ++ copyLines)) ++ segs
   }
 
   /** Attempts a DML re-plan loop makes before giving up — each retry
@@ -913,7 +820,7 @@ object LakeSink {
       // pins base.schemaV).
       newSchema: Option[(Long, String, Map[String, String])] = None,
       // r17: row counts the caller already knows for `added` segments
-      // (DML censuses count them anyway) — commitEditRecord then
+      // (DML censuses count them anyway) — commitNext then
       // records them with ZERO footer reads; segments not listed fall
       // back to the partition fact or one footer read at the gate.
       addedRows: Map[String, Long] = Map.empty)
@@ -932,26 +839,18 @@ object LakeSink {
     }.toMap
     var tip = base
     while (true) {
-      val segs = tip.segs.filterNot(removed) ++ added
-      val stats = (tip.stats -- removed) ++ addedStats
-      val txns = txn.fold(tip.txns) { case (a, id) => tip.txns + (a -> id) }
-      val dv = (tip.dv -- removed) ++ dvSets
-      val parts = (tip.parts -- removed) ++ addedParts
-      if (commitEditRecord(outDir, tip,
-          Manifest(tip.version + 1, tip.maxB, segs,
-            newSchema.fold(tip.schemaV)(_._1),
-            newSchema.fold(tip.schemaJson)(s => Some(s._2)),
-            stats, txns, tip.expects, cdcSegs,
-            dataChange = dataChange, dv = dv,
-            colmap = newSchema.fold(tip.colmap)(_._3),
-            partSpec = tip.partSpec, parts = parts,
-            cdcDropSegs = cdcDropSegs, bloomCols = tip.bloomCols,
-            copied = tip.copied,
-            // carry the chain's row counts — a snapshot-interval
-            // commit writes FULL state, so omitting them here would
-            // silently drop every prior segment's count (r17 review)
-            segRows = (tip.segRows -- removed) ++ addedRowsFull),
-          removed, added, addedStats, dvSets, addedParts))
+      if (commitNext(outDir, tip, tip.copy(version = tip.version + 1,
+          segs = tip.segs.filterNot(removed) ++ added,
+          schemaV = newSchema.fold(tip.schemaV)(_._1),
+          schemaJson = newSchema.fold(tip.schemaJson)(s => Some(s._2)),
+          stats = (tip.stats -- removed) ++ addedStats,
+          txns = txn.fold(tip.txns)(tip.txns + _),
+          cdcSegs = cdcSegs, dataChange = dataChange,
+          dv = (tip.dv -- removed) ++ dvSets,
+          colmap = newSchema.fold(tip.colmap)(_._3),
+          parts = (tip.parts -- removed) ++ addedParts,
+          cdcDropSegs = cdcDropSegs,
+          segRows = (tip.segRows -- removed) ++ addedRowsFull)))
         return Some(tip.version + 1)
       val now = readManifest(outDir)
       val nowSegs = now.segs.toSet
@@ -991,8 +890,8 @@ object LakeSink {
     // dimension, so retention/backfill predicates over any subset of
     // the dimensions stay metadata-only.
     val spec = partitionBy.map(normalizePartSpec(schema, _))
-    require(commitManifest(outDir, 1L, -1L, Nil, 1L, Some(schema.json),
-      partSpec = spec),
+    require(commitManifest(outDir, Manifest(1L, -1L, Nil, 1L,
+      Some(schema.json), partSpec = spec)),
       s"create table at $outDir lost a manifest race")
     1L
   }
@@ -2264,7 +2163,6 @@ object LakeSink {
       require(Seq[DataType](LongType, IntegerType, ShortType, ByteType,
         StringType).contains(f.dataType),
         s"bloom column $c must be integral or string, is ${f.dataType}")
-      require(!c.contains('|'), s"bloom column name must not contain '|': $c")
       m.physicalOf(c)
     }
     require(commitNext(outDir, m, m.copy(version = m.version + 1,
@@ -2535,12 +2433,10 @@ object LakeSink {
           }
       }
       beforeCommit()
-      if (commitManifest(outDir, m.version + 1, m.maxB, t.segs,
-          t.schemaV, t.schemaJson, t.stats, m.txns, m.expects,
-          cdcSegs = if (cdcRows) Seq(cdcSeg) else Nil,
-          dataChange = true, dv = t.dv, colmap = t.colmap,
-          partSpec = m.partSpec, parts = t.parts,
-          bloomCols = m.bloomCols,
+      if (commitManifest(outDir, t.copy(version = m.version + 1,
+          maxB = m.maxB, txns = m.txns, expects = m.expects,
+          cdcSegs = if (cdcRows) Seq(cdcSeg) else Nil, cdcDropSegs = Nil,
+          dataChange = true, partSpec = m.partSpec, bloomCols = m.bloomCols,
           // like txns: the load-history ledger is append-only TIP
           // state — a restore undoes data, not the fact that a
           // landing-zone file was already ingested (a post-restore
@@ -2549,9 +2445,8 @@ object LakeSink {
           // never-downgrade (r16): the restored snapshot keeps the
           // HIGHEST declared minimums seen on the chain — undoing
           // data must not re-admit writers the tip had fenced out
-          minReaderFloor = math.max(m.minReader, t.minReader),
-          minWriterFloor = math.max(m.minWriter, t.minWriter),
-          segRows = t.segRows))
+          minReader = math.max(m.minReader, t.minReader),
+          minWriter = math.max(m.minWriter, t.minWriter))))
         return (m.version + 1, addedSegs.size, removedSegs.size)
       // lost the CAS — re-plan against the new tip
     }
@@ -2646,15 +2541,12 @@ object LakeSink {
     }
     t.segs.foreach(linkTree)
     t.dv.values.map(_.file).toSet.foreach((f: String) => linkTree(s"_dv/$f"))
-    require(commitManifest(dstDir, 1L, -1L, t.segs, t.schemaV,
-      t.schemaJson, t.stats, Map.empty, t.expects, Nil,
-      dataChange = true, t.dv, t.colmap, t.partSpec, t.parts,
-      bloomCols = t.bloomCols, copied = t.copied,
-      // the clone's v1 inherits the source version's declared
-      // minimums (r16 never-downgrade) — branching must not re-admit
-      // writers the source had fenced out
-      minReaderFloor = t.minReader, minWriterFloor = t.minWriter,
-      segRows = t.segRows),
+    // the clone's v1 inherits the source version's declared minimums
+    // (r16 never-downgrade) — branching must not re-admit writers the
+    // source had fenced out
+    require(commitManifest(dstDir, t.copy(version = 1L, maxB = -1L,
+      txns = Map.empty, cdcSegs = Nil, cdcDropSegs = Nil,
+      dataChange = true)),
       s"clone commit at $dstDir lost a manifest race")
     (t.segs.size, files, bytes)
   }
@@ -3280,10 +3172,7 @@ object LakeSink {
     // own record — O(log) total, not O(versions · walk-back).
     val manifests = versions.headOption.fold(Seq.empty[Manifest]) { v0 =>
       versions.tail.scanLeft(manifestAt(outDir, v0)) { (acc, v) =>
-        parseVersionFile(outDir, v) match {
-          case Right(m) => m
-          case Left(d) => applyDelta(acc, d)
-        }
+        nextManifest(outDir, v, acc)
       }
     }
     val tip = versions.lastOption.getOrElse(0L)
@@ -3346,10 +3235,7 @@ object LakeSink {
       require(Files.exists(md.resolve(f"v$v%010d.txt")),
         s"manifest v$v inside window v$fromV..v$toV was vacuumed — " +
           "the change feed horizon is the vacuum retention horizon")
-      val cur = parseVersionFile(outDir, v) match {
-        case Right(m) => m
-        case Left(d) => applyDelta(prev, d)
-      }
+      val cur = nextManifest(outDir, v, prev)
       val removed = prev.segs.toSet -- cur.segs
       require(removed.isEmpty,
         s"version window v$fromV..v$toV is not append-only (v$v " +
@@ -3410,10 +3296,7 @@ object LakeSink {
       require(Files.exists(md.resolve(f"v$v%010d.txt")),
         s"manifest v$v inside CDC window v$fromV..v$toV was vacuumed — " +
           "the change feed horizon is the vacuum retention horizon")
-      val cur = parseVersionFile(outDir, v) match {
-        case Right(mm) => mm
-        case Left(d) => applyDelta(prev, d)
-      }
+      val cur = nextManifest(outDir, v, prev)
       val prevSet = prev.segs.toSet
       val dropSet = cur.cdcDropSegs.toSet
       // partition-covered metadata drops: the DROPPED segment's own
@@ -3515,18 +3398,13 @@ object LakeSink {
     // Delta's checkpoint move), so every retained version keeps
     // reconstructing from files that survive the vacuum.
     val oldestRetained = retained.head
-    if (parseVersionFile(outDir, oldestRetained).isLeft) {
-      val b = manifestAt(outDir, oldestRetained)
+    // The checkpoint carries the chain's declared minimums (r16):
+    // reconstruction resets at a .snap, so dropping them here would
+    // downgrade every later version's gate.
+    if (isDelta(versionLines(outDir, oldestRetained)))
       Files.write(snapPath(outDir, oldestRetained),
-        snapshotLines(b.maxB, b.segs, b.schemaV, b.schemaJson, b.stats,
-          b.txns, b.expects, b.cdcSegs, b.dataChange, b.dv, b.colmap,
-          b.partSpec, b.parts, b.cdcDropSegs, b.bloomCols, b.copied,
-          // checkpoints carry the chain's declared minimums (r16):
-          // reconstruction resets at a .snap, so dropping them here
-          // would downgrade every later version's gate
-          b.minReader, b.minWriter, b.segRows)
+        encode(None, manifestAt(outDir, oldestRetained))
           .mkString("\n").getBytes("UTF-8"))
-    }
     // Live segments = union over the retained versions, reconstructed
     // incrementally along the contiguous suffix (the boundary .snap
     // makes the first reconstruction one file read). A retained
@@ -3545,10 +3423,7 @@ object LakeSink {
     live ++= acc.cdcDropSegs
     liveDv ++= acc.dv.values.map(_.file)
     retained.tail.foreach { v =>
-      acc = parseVersionFile(outDir, v) match {
-        case Right(m) => m
-        case Left(d) => applyDelta(acc, d)
-      }
+      acc = nextManifest(outDir, v, acc)
       live ++= acc.segs
       live ++= acc.cdcSegs
       live ++= acc.cdcDropSegs
@@ -4576,8 +4451,7 @@ object LakeSink {
       parts = (m.parts -- rm) ++ addParts.result(),
       dv = m.dv -- rm,
       cdcSegs = Nil, cdcDropSegs = Nil, dataChange = false)
-    require(commitEditRecord(outDir, m, next, rm, added.result(),
-      addStats.result(), addedParts = addParts.result()),
+    require(commitNext(outDir, m, next),
       s"partition compaction at $outDir lost a manifest race")
     (m.version + 1, groups.size)
   }
@@ -4594,15 +4468,7 @@ object LakeSink {
     * NOT VALID` semantics). Returns the committed version. */
   def addExpectation(spark: SparkSession, outDir: String, name: String,
       condSql: String): Long = {
-    require(!name.contains('|') && name.nonEmpty,
-      s"expectation name must be non-empty without '|': $name")
-    // The manifest is line-oriented: a multi-line condition (legal SQL
-    // that passes analysis) would be written as one `expect=` header
-    // whose continuation lines later parse as segment names, poisoning
-    // every subsequent read of the table. Refuse at registration.
-    require(!condSql.exists(c => c == '\n' || c == '\r'),
-      "expectation SQL must be single-line (the manifest is " +
-        "line-oriented); rewrite the condition without newlines")
+    require(name.nonEmpty, "expectation name must be non-empty")
     val m = readManifest(outDir)
     requireTable(m, outDir)
     require(!m.expects.contains(name),
@@ -6498,7 +6364,7 @@ object LakeSink {
               org.apache.commons.io.FileUtils.deleteQuietly(
                 new java.io.File(s"$outDir/$seg"))
               true
-            } else commitEditRecord(outDir, m,
+            } else commitNext(outDir, m,
               // copy, not positional construction: cumulative state
               // (dv, schema, txns) rides through; per-version
               // annotations reset (see addExpectation's note)
@@ -6506,9 +6372,7 @@ object LakeSink {
                 segs = m.segs :+ seg,
                 stats =
                   if (bstats.isEmpty) m.stats else m.stats + (seg -> bstats),
-                cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true),
-              Set.empty, Seq(seg),
-              if (bstats.isEmpty) Map.empty else Map(seg -> bstats))
+                cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true))
         }
         if (batchId % compactEvery == (compactEvery - 1)) {
           val m = readManifest(outDir)
@@ -6529,15 +6393,13 @@ object LakeSink {
                 statsCols.map(m.physicalOf))
             writeSegmentBlooms(spark, outDir, cseg, m.bloomCols)
             beforeMaintenanceCommit(batchId)
-            if (commitEditRecord(outDir, m,
+            if (commitNext(outDir, m,
                 m.copy(version = m.version + 1,
                   segs = m.segs.filterNot(bsegs.contains) :+ cseg,
                   stats = (if (cstats.isEmpty) m.stats
                     else m.stats + (cseg -> cstats)) -- bsegs,
                   cdcSegs = Nil, cdcDropSegs = Nil, dataChange = false,
-                  dv = m.dv -- bsegs),
-                bsegs.toSet, Seq(cseg),
-                if (cstats.isEmpty) Map.empty else Map(cseg -> cstats))) {
+                  dv = m.dv -- bsegs))) {
               // now-orphaned inputs: invisible to every reader; removal
               // is best-effort hygiene, crash-safe to skip
               bsegs.foreach { s =>

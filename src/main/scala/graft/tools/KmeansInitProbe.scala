@@ -17,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   * any k; the driver-side weighted farthest-point reduction touches
   * only the ≤ 1+3·2k collected candidates (megabytes at k = 4096).
   * This probe pins the job slope FLAT in k — the same evidence shape
-  * DmlJobProbe uses for the batched DML planner.
+  * DmlJobProbe used for the batched DML planner (IMPLEMENTATION.md,
+  * "Deleted probes").
   */
 object KmeansInitProbe {
 

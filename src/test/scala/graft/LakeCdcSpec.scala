@@ -35,8 +35,8 @@ class LakeCdcSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("id", "flag").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     dir
   }
@@ -382,7 +382,8 @@ class LakeCdcSpec extends AnyFunSuite with SparkFixture {
     // appends; the merge rewrites both to the source row
     Seq((1L, 0L), (1L, 0L), (2L, 1L)).toDF("id", "flag").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/seg_b0")
-    require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")))
+    require(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, 0L, Seq("seg_b0"))))
     val (v, _, nUpd, nIns) = LakeSink.mergeInto(spark, dir,
       Seq((1L, 9L)).toDF("id", "flag"), Seq("id"), cdc = true)
     assert(nUpd === 2L && nIns === 0L)

@@ -26,8 +26,8 @@ class LakeChangeFeedSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("id", "seg").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     dir
   }
@@ -146,8 +146,9 @@ class LakeChangeFeedSpec extends AnyFunSuite with SparkFixture {
       if (!delta.isEmpty) {
         if (LakeSink.readManifest(silver).segs.isEmpty) {
           delta.write.mode("overwrite").parquet(s"$silver/seg_b0")
-          require(LakeSink.commitManifest(silver, 1L, 0L, Seq("seg_b0"),
-            txns = Map("silver-fold" -> batchId)))
+          require(LakeSink.commitManifest(silver,
+            LakeSink.Manifest(1L, 0L, Seq("seg_b0"),
+              txns = Map("silver-fold" -> batchId))))
         } else {
           val cur = LakeSink.readTable(s, silver)
             .withColumnRenamed("n", "cur_n")

@@ -36,8 +36,8 @@ class LakeCloneSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("id", "flag").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     dir
   }

@@ -26,8 +26,8 @@ class LakeCompactionSpec extends AnyFunSuite with SparkFixture {
       ev.filter(col("event_id") % 4 === i)
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     (dir, ev.count())
   }
@@ -90,8 +90,8 @@ class LakeCompactionSpec extends AnyFunSuite with SparkFixture {
       ev.filter(col("event_id") % 4 === i)
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     val total = ev.count()
     val tmeMax = ev.agg(max("tme")).head.getLong(0)
@@ -132,7 +132,8 @@ class LakeCompactionSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     Seq((1L, 10L)).toDF("user_id", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b0")
-    require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")))
+    require(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, 0L, Seq("seg_b0"))))
     val (v, nIn) = LakeSink.compact(spark, dir, clusterBy = Seq("user_id"))
     assert(v === 1L && nIn === 0)
     assert(LakeSink.readManifest(dir).segs === Seq("seg_b0"))
@@ -147,8 +148,8 @@ class LakeCompactionSpec extends AnyFunSuite with SparkFixture {
         rows.toDF("user_id", "v")
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b$i")
         val m = LakeSink.readManifest(dir)
-        require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-          m.segs :+ s"seg_b$i"))
+        require(LakeSink.commitManifest(dir,
+          LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
       }
     LakeSink.evolveAddColumn(spark, dir, "score",
       org.apache.spark.sql.types.LongType)

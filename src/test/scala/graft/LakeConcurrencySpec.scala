@@ -40,7 +40,7 @@ class LakeConcurrencySpec extends AnyFunSuite with SparkFixture {
         val m = LakeSink.readManifest(dir)
         barrier.await()
         results.put(seg, LakeSink.commitManifest(
-          dir, m.version + 1, 0L, m.segs :+ seg))
+          dir, LakeSink.Manifest(m.version + 1, 0L, m.segs :+ seg)))
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
@@ -50,8 +50,8 @@ class LakeConcurrencySpec extends AnyFunSuite with SparkFixture {
     val loserSeg = if (results("seg_a")) "seg_b" else "seg_a"
     val m2 = LakeSink.readManifest(dir)
     assert(m2.version === 1L && m2.segs.size === 1)
-    assert(LakeSink.commitManifest(dir, m2.version + 1, 0L,
-      m2.segs :+ loserSeg), "retry at the advanced version succeeds")
+    assert(LakeSink.commitManifest(dir, LakeSink.Manifest(m2.version + 1, 0L,
+      m2.segs :+ loserSeg)), "retry at the advanced version succeeds")
     val m3 = LakeSink.readManifest(dir)
     assert(m3.version === 2L)
     assert(m3.segs.sorted === Seq("seg_a", "seg_b"))
@@ -79,7 +79,7 @@ class LakeConcurrencySpec extends AnyFunSuite with SparkFixture {
             while (!committed) {
               val m = LakeSink.readManifest(dir)
               committed = LakeSink.commitManifest(
-                dir, m.version + 1, 0L, m.segs :+ seg)
+                dir, LakeSink.Manifest(m.version + 1, 0L, m.segs :+ seg))
               if (!committed) retries.incrementAndGet()
             }
           }
@@ -135,7 +135,8 @@ class LakeConcurrencySpec extends AnyFunSuite with SparkFixture {
       r.map(_.toLong).toDF("v")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/$seg")
     }
-    assert(LakeSink.commitManifest(dir, 1L, -1L, segRows.map(_._1)))
+    assert(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, -1L, segRows.map(_._1))))
     dir
   }
 

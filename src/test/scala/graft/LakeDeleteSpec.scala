@@ -35,8 +35,8 @@ class LakeDeleteSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("user_id", "v")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     dir
   }
@@ -111,7 +111,8 @@ class LakeDeleteSpec extends AnyFunSuite with SparkFixture {
     Seq((1L, Option(10L)), (2L, Option.empty[Long]), (3L, Option(30L)))
       .toDF("user_id", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b0")
-    require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")))
+    require(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, 0L, Seq("seg_b0"))))
     val (_, rewritten, dropped, deleted) =
       LakeSink.deleteWhere(spark, dir, col("v") > 15L)
     assert(rewritten === 1 && dropped === 0 && deleted === 1L)
@@ -132,7 +133,8 @@ class LakeDeleteSpec extends AnyFunSuite with SparkFixture {
       Seq((1L, 0L, 10L), (2L, 4L, 20L), (3L, 0L, 30L), (4L, 5L, 40L))
         .toDF("k", "w", "v")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b0")
-      require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(1L, 0L, Seq("seg_b0"))))
       dir
     }
     for (dvf <- Seq(0.0, 1.0)) {

@@ -38,8 +38,8 @@ class LakeDvSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("id", "flag").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     dir
   }
@@ -120,7 +120,8 @@ class LakeDvSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     (0L until 5L).map(i => (i, i % 2)).toDF("id", "flag").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/seg_b0")
-    require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")))
+    require(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, 0L, Seq("seg_b0"))))
     LakeSink.deleteWhere(spark, dir, col("id") === 2L, dvMaxFraction = 0.5)
     val (_, nIn) = LakeSink.compact(spark, dir, targetFiles = 1)
     assert(nIn === 1)
@@ -198,8 +199,8 @@ class LakeDvSpec extends AnyFunSuite with SparkFixture {
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b0")
     val stats = LakeSink.segmentStats(
       spark.read.parquet(s"$dir/seg_b0"), Seq("ts"))
-    require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0"),
-      stats = Map("seg_b0" -> stats)))
+    require(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, 0L, Seq("seg_b0"), stats = Map("seg_b0" -> stats))))
     // hide ts=900 behind a DV; recorded max stays 900 (stale, sound)
     LakeSink.deleteWhere(spark, dir, col("ts") === 900L,
       dvMaxFraction = 0.5)
@@ -399,8 +400,8 @@ class LakeDvSpec extends AnyFunSuite with SparkFixture {
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b0")
     val stats = LakeSink.segmentStats(
       spark.read.parquet(s"$dir/seg_b0"), Seq("ts"))
-    require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0"),
-      stats = Map("seg_b0" -> stats)))
+    require(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, 0L, Seq("seg_b0"), stats = Map("seg_b0" -> stats))))
     // move ts 900 → 1500 merge-on-read: source keeps [0,900] (stale,
     // sound — its live rows are a subset), post-image records [1500]
     val (_, rw, _) = LakeSink.updateWhere(spark, dir, col("ts") === 900L,

@@ -27,7 +27,8 @@ class LakeExpectationsSpec extends AnyFunSuite with SparkFixture {
       .createTempDirectory("graft_lake_expect_spec").toString
     Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b0")
-    require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")))
+    require(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, 0L, Seq("seg_b0"))))
     dir
   }
 

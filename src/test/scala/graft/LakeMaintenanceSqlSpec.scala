@@ -21,8 +21,8 @@ class LakeMaintenanceSqlSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("id", "flag").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     val tbl = "graft_maint_" + java.lang.Long.toHexString(System.nanoTime())
     LakeCatalog.register(tbl, dir)

@@ -39,8 +39,8 @@ class LakeMergeClausesSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("user_id", "v")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     dir
   }
@@ -137,8 +137,8 @@ class LakeMergeClausesSpec extends AnyFunSuite with SparkFixture {
       s -> LakeSink.segmentStats(
         spark.read.parquet(s"$dir/$s"), Seq("user_id"))
     }.toMap
-    require(LakeSink.commitManifest(dir, m0.version + 1, m0.maxB,
-      m0.segs, stats = stats))
+    require(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(m0.version + 1, m0.maxB, m0.segs, stats = stats)))
     // source keys all in seg1's [3,4] range — seg0/seg2 must prune
     val source = Seq((3L, 300L)).toDF("user_id", "src_v")
     val (_, rewritten, updated, _, _) =

@@ -37,8 +37,8 @@ class LakeRestoreSpec extends AnyFunSuite with SparkFixture {
       rows.toDF("id", "flag").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     dir
   }
@@ -209,8 +209,8 @@ class LakeRestoreSpec extends AnyFunSuite with SparkFixture {
         Seq((100L, 0L)).toDF("id", "flag").coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/seg_race")
         val m = LakeSink.readManifest(dir)
-        require(LakeSink.commitManifest(dir, m.version + 1, m.maxB,
-          m.segs :+ "seg_race"))
+        require(LakeSink.commitManifest(dir,
+          LakeSink.Manifest(m.version + 1, m.maxB, m.segs :+ "seg_race")))
       })
     // the retry re-planned against the tip: restore wins the NEXT
     // version and lands the target state (the racing append's segment

@@ -44,8 +44,9 @@ class LakeStatsSpec extends AnyFunSuite with SparkFixture {
           m.stats + (s"seg_b$i" -> LakeSink.segmentStats(
             spark.read.parquet(s"$dir/seg_b$i"), Seq("tse")))
         else m.stats
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i", m.schemaV, m.schemaJson, st))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i",
+          m.schemaV, m.schemaJson, st)))
     }
     dir
   }
@@ -353,7 +354,8 @@ class LakeStatsSpec extends AnyFunSuite with SparkFixture {
         if (!latest.isEmpty) {
           if (LakeSink.readManifest(dir).segs.isEmpty) {
             latest.write.mode("overwrite").parquet(s"$dir/seg_b0")
-            require(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0")))
+            require(LakeSink.commitManifest(dir,
+              LakeSink.Manifest(1L, 0L, Seq("seg_b0"))))
           } else {
             LakeSink.mergeInto(latest.sparkSession, dir, latest, Seq("k"))
           }
@@ -400,12 +402,13 @@ class LakeStatsSpec extends AnyFunSuite with SparkFixture {
       val df = rows.toDF("id", "event_type", "note")
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i", m.schemaV, m.schemaJson,
-        if (!withStats) m.stats
-        else m.stats + (s"seg_b$i" -> LakeSink.segmentStats(
-          spark.read.parquet(s"$dir/seg_b$i"),
-          Seq("event_type", "note")))))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i",
+          m.schemaV, m.schemaJson,
+          if (!withStats) m.stats
+          else m.stats + (s"seg_b$i" -> LakeSink.segmentStats(
+            spark.read.parquet(s"$dir/seg_b$i"),
+            Seq("event_type", "note"))))))
     }
     dir
   }
@@ -494,10 +497,11 @@ class LakeStatsSpec extends AnyFunSuite with SparkFixture {
       val df = rows.toDF("tse", "v")
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i", m.schemaV, m.schemaJson,
-        m.stats + (s"seg_b$i" -> LakeSink.segmentStats(
-          spark.read.parquet(s"$dir/seg_b$i"), Seq("tse")))))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i",
+          m.schemaV, m.schemaJson,
+          m.stats + (s"seg_b$i" -> LakeSink.segmentStats(
+            spark.read.parquet(s"$dir/seg_b$i"), Seq("tse"))))))
     }
     // cutoff 20 = exact boundary: seg0 [0,9] and seg1 [10,19] provably
     // FULL-match (hi < 20, nulls = 0), seg2 [20,29] provably disjoint

@@ -33,8 +33,8 @@ class LakeTimeTravelSpec extends AnyFunSuite with SparkFixture {
       Seq((i.toLong, i * 10L)).toDF("id", "v").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
       Thread.sleep(20)
     }
     dir

@@ -28,13 +28,163 @@ class ManifestLogSpec extends AnyFunSuite with SparkFixture {
       .createTempDirectory("graft_mlog_spec").toString
     Seq(0L).toDF("v").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/seg_b0")
-    assert(LakeSink.commitManifest(dir, 1L, -1L, Seq("seg_b0")))
+    assert(LakeSink.commitManifest(dir,
+      LakeSink.Manifest(1L, -1L, Seq("seg_b0"))))
     dir
   }
 
   private def append(dir: String, i: Int): Long =
     LakeSink.appendSegment(spark, dir,
       Seq(i.toLong).toDF("v"), s"seg_a$i")
+
+  // ---- golden bytes: the on-disk format, pinned ---------------------
+  // Captured from the encoder of commit 9c36777 (before the single
+  // line-kind table), so tables written before and after read alike;
+  // any codec edit that changes a byte fails here.
+
+  private val goldenSchema =
+    """{"type":"struct","fields":[{"name":"k","type":"long",""" +
+      """"nullable":true,"metadata":{}}]}"""
+
+  private val goldenSnapshot = LakeSink.Manifest(1L, 7L,
+    Seq("seg_b0", "seg_b1", "seg_c2"),
+    schemaV = 2L, schemaJson = Some(goldenSchema),
+    stats = Map(
+      "seg_b0" -> Map("k" -> LakeSink.LongStat(-5L, 9L, 0L),
+        "s" -> LakeSink.StrStat("a|b=c", "é漢😀", 2L)),
+      "seg_b1" -> Map("k" -> LakeSink.LongStat(10L, 20L, -1L))),
+    txns = Map("app1" -> 4L, "zeta" -> 0L),
+    expects = Map("k_pos" -> "k > 0 OR s = 'a|b'",
+      "a_nn" -> "s IS NOT NULL"),
+    cdcSegs = Seq("seg_cdc1"), dataChange = false,
+    dv = Map("seg_b1" -> LakeSink.DvRef("dv_seg_b1_1", 3L)),
+    colmap = Map("k" -> "k", "s" -> "s_p1"),
+    partSpec = Some("day,s_p1"),
+    parts = Map(
+      "seg_b0" -> LakeSink.PartVal("day", Some("2024-01-01"), 11L,
+        Seq("s_p1" -> None)),
+      "seg_c2" -> LakeSink.PartVal("day", None, 4L)),
+    cdcDropSegs = Seq("seg_old"),
+    bloomCols = Seq("k", "s_p1"),
+    copied = Set("f00d", "beef"),
+    minReader = 2L, minWriter = 3L,
+    segRows = Map("seg_b0" -> 11L, "seg_b1" -> 6L, "seg_c2" -> 4L))
+
+  private val goldenSnapshotText = Seq(
+    "maxb=7",
+    "schemav=2",
+    "schema=" + goldenSchema,
+    "minreader=2",
+    "minwriter=3",
+    "partspec=day,s_p1",
+    "bloomcols=k|s_p1",
+    "stats=seg_b0|k|-5|9|0",
+    "stats=seg_b1|k|10|20|-1",
+    "strstats=seg_b0|s|YXxiPWM=|w6nmvKLwn5iA|2",
+    "txn=app1|4",
+    "txn=zeta|0",
+    "expect=a_nn|s IS NOT NULL",
+    "expect=k_pos|k > 0 OR s = 'a|b'",
+    "colmap=k|k",
+    "colmap=s|s_p1",
+    "part=seg_b0|day|11|MjAyNC0wMS0wMQ==|s_p1|",
+    "part=seg_c2|day|4|",
+    "segrows=seg_b0|11",
+    "segrows=seg_b1|6",
+    "segrows=seg_c2|4",
+    "dvec=seg_b1|dv_seg_b1_1|3",
+    "cdc=seg_cdc1",
+    "cdcdrop=seg_old",
+    "datachange=0",
+    "copy=beef",
+    "copy=f00d",
+    "seg_b0",
+    "seg_b1",
+    "seg_c2").mkString("\n")
+
+  private val goldenDelta = goldenSnapshot.copy(version = 2L, maxB = 8L,
+    segs = Seq("seg_b0", "seg_c2", "seg_b3"),
+    schemaV = 3L, schemaJson = Some(goldenSchema.replace("\"k\"", "\"kk\"")),
+    stats = Map("seg_b0" -> goldenSnapshot.stats("seg_b0"),
+      "seg_c2" -> Map("k" -> LakeSink.LongStat(1L, 2L, 0L)),
+      "seg_b3" -> Map("s" -> LakeSink.StrStat("", "zz", 0L))),
+    txns = Map("app1" -> 5L), expects = Map("a_nn" -> "s IS NOT NULL"),
+    cdcSegs = Seq("seg_cdc2"), dataChange = true,
+    dv = Map("seg_c2" -> LakeSink.DvRef("dv_seg_c2_2", 1L)),
+    colmap = Map("kk" -> "k", "s" -> "s_p1"),
+    parts = goldenSnapshot.parts - "seg_b1" +
+      ("seg_b3" -> LakeSink.PartVal("day", Some("x|y"), 2L)),
+    cdcDropSegs = Nil,
+    copied = goldenSnapshot.copied + "cafe",
+    segRows = goldenSnapshot.segRows - "seg_b1" + ("seg_b3" -> 2L))
+
+  private val goldenDeltaText = Seq(
+    "delta=1",
+    "maxb=8",
+    "schemav=3",
+    "schema=" + goldenSchema.replace("\"k\"", "\"kk\""),
+    "minreader=2",
+    "minwriter=3",
+    "txn=app1|5",
+    "expect=a_nn|s IS NOT NULL",
+    "colmap=kk|k",
+    "colmap=s|s_p1",
+    "partspec=day,s_p1",
+    "bloomcols=k|s_p1",
+    "cdc=seg_cdc2",
+    "dvec=seg_c2|dv_seg_c2_2|1",
+    "part=seg_b3|day|2|eHx5",
+    "copy=cafe",
+    "segrows=seg_b3|2",
+    "add=seg_b3",
+    "remove=seg_b1",
+    "stats=seg_c2|k|1|2|0",
+    "strstats=seg_b3|s||eno=|0").mkString("\n")
+
+  private def versionText(dir: String, v: Long): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      dir, "_manifest", f"v$v%010d.txt")), "UTF-8")
+
+  test("golden bytes: a fully-featured snapshot and delta encode and decode unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_golden").toString
+    assert(LakeSink.commitManifest(dir, goldenSnapshot))
+    assert(versionText(dir, 1L) === goldenSnapshotText)
+    val parent = LakeSink.readManifest(dir)
+    assert(parent === goldenSnapshot)
+    assert(LakeSink.commitNext(dir, parent, goldenDelta))
+    assert(versionText(dir, 2L) === goldenDeltaText)
+    assert(LakeSink.readManifest(dir) === goldenDelta)
+    // the pinned bytes, written by hand, decode to the same states
+    val hand = java.nio.file.Files.createTempDirectory("graft_golden").toString
+    val md = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(hand, "_manifest"))
+    java.nio.file.Files.write(md.resolve("v0000000001.txt"),
+      goldenSnapshotText.getBytes("UTF-8"))
+    java.nio.file.Files.write(md.resolve("v0000000002.txt"),
+      goldenDeltaText.getBytes("UTF-8"))
+    assert(LakeSink.manifestAt(hand, 1L) === goldenSnapshot)
+    assert(LakeSink.readManifest(hand) === goldenDelta)
+  }
+
+  test("the codec refuses a field it cannot carry before the CAS") {
+    val dir = freshLake()
+    append(dir, 2)
+    val before = LakeSink.readManifest(dir)
+    // a `|` in a logical column name would make every later read throw
+    val e = intercept[IllegalArgumentException] {
+      LakeSink.evolveRenameColumn(spark, dir, "v", "a|b")
+    }
+    assert(e.getMessage.contains("colmap logical name"))
+    assert(LakeSink.readManifest(dir) === before)
+    assert(LakeSink.readTable(spark, dir).count() === 2L)
+    // a `|` in a txn app id would split its manifest line
+    val e2 = intercept[IllegalArgumentException] {
+      LakeSink.appendSegment(spark, dir, Seq(3L).toDF("v"), "seg_a3",
+        txn = Some(("app|x", 1L)))
+    }
+    assert(e2.getMessage.contains("txn app id"))
+    assert(LakeSink.readManifest(dir) === before)
+  }
 
   test("append chain across the snapshot boundary: exact state at every version") {
     val dir = freshLake()
@@ -123,9 +273,9 @@ class ManifestLogSpec extends AnyFunSuite with SparkFixture {
     val m = LakeSink.readManifest(dir)
     Seq(99L).toDF("v").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/seg_ext")
-    assert(LakeSink.commitManifest(dir, m.version + 1, m.maxB,
+    assert(LakeSink.commitManifest(dir, LakeSink.Manifest(m.version + 1, m.maxB,
       m.segs :+ "seg_ext", m.schemaV, m.schemaJson, m.stats, m.txns,
-      m.expects))
+      m.expects)))
     (7 to 9).foreach(append(dir, _))
     val tip = LakeSink.readManifest(dir)
     assert(tip.version === 9L)

@@ -87,8 +87,9 @@ class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
       val m = LakeSink.readManifest(dir)
       val st = m.stats + (s"seg_b$i" -> LakeSink.segmentStats(
         spark.read.parquet(s"$dir/seg_b$i"), Seq("k")))
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i", m.schemaV, m.schemaJson, st))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i",
+          m.schemaV, m.schemaJson, st)))
     }
     dir
   }
@@ -170,8 +171,8 @@ class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
         .toDF("k", "v")
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/seg_b$i")
       val m = LakeSink.readManifest(dir)
-      require(LakeSink.commitManifest(dir, m.version + 1, i.toLong,
-        m.segs :+ s"seg_b$i"))
+      require(LakeSink.commitManifest(dir,
+        LakeSink.Manifest(m.version + 1, i.toLong, m.segs :+ s"seg_b$i")))
     }
     dir
   }

@@ -75,6 +75,43 @@ class ProtocolGateSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("upgrade the engine"))
   }
 
+  test("a repeated scalar header fails loud in both record kinds") {
+    val dir = tmp("graft_gate_dup")
+    mkLake(dir) // v1 create, v2 append
+    val md = Paths.get(dir, "_manifest")
+    for ((kind, text) <- Seq(
+        "snapshot" -> "maxb=1\nmaxb=2\nseg_a",
+        "delta" -> "delta=1\nmaxb=1\nmaxb=2",
+        "delta" -> "delta=1\nmaxb=1\nschemav=1\nschemav=2",
+        "snapshot" -> "maxb=1\nminreader=1\nminreader=2\nseg_a")) {
+      Files.write(md.resolve("v0000000003.txt"), text.getBytes("UTF-8"))
+      val e = intercept[IllegalStateException] {
+        LakeSink.readManifest(dir)
+      }
+      assert(e.getMessage.contains("repeated"), s"$kind: ${e.getMessage}")
+      assert(e.getMessage.contains("manifest v3"), s"$kind: ${e.getMessage}")
+    }
+  }
+
+  test("unknown headers are ignored in both record kinds (forward compatibility)") {
+    val dir = tmp("graft_gate_unknown")
+    mkLake(dir) // v1 create, v2 append
+    val v2 = LakeSink.readManifest(dir)
+    val md = Paths.get(dir, "_manifest")
+    // a newer writer's per-commit metrics: unknown keys, even repeated
+    Files.write(md.resolve("v0000000003.txt"),
+      "delta=1\nmaxb=1\nop=APPEND\nop=X\nrows_in=20\nadd=seg_a3"
+        .getBytes("UTF-8"))
+    val v3 = LakeSink.readManifest(dir)
+    assert(v3.version === 3L && v3.segs === v2.segs :+ "seg_a3")
+    assert(v3.schemaJson === v2.schemaJson && v3.maxB === 1L)
+    Files.write(md.resolve("v0000000004.txt"),
+      "maxb=2\nop=OPTIMIZE\ncommit_ms=17\nseg_a".getBytes("UTF-8"))
+    val v4 = LakeSink.readManifest(dir)
+    assert(v4.version === 4L && v4.segs === Seq("seg_a") && v4.maxB === 2L)
+    assert(v4.minReader === 1L && v4.minWriter === 1L)
+  }
+
   test("a table from the future refuses the WRITER loudly but stays readable") {
     val dir = tmp("graft_gate_writer")
     mkLake(dir)

@@ -117,7 +117,7 @@ class SchemaCanarySpec extends AnyFunSuite with SparkFixture {
 
   test("bootstrap-recorded schemaJson (schemaV 0) persists in the manifest") {
     // r19 (advisor, r18 ADVICE #1): a schema recorded at ingest with
-    // schemaV 0 must actually land in the manifest — snapshotLines
+    // schemaV 0 must actually land in the manifest — the snapshot encoder
     // previously emitted schema= only when schemaV > 0, silently
     // dropping the bootstrap schema every clone-based query was
     // claimed to read. Pin the full life cycle: ingest, re-read, and
@@ -128,8 +128,8 @@ class SchemaCanarySpec extends AnyFunSuite with SparkFixture {
       .createTempDirectory("graft_canary_sj").toString
     val df = Seq((1L, 2L), (3L, 4L)).toDF("k", "v")
     df.write.mode("overwrite").parquet(s"$dir/seg_b0")
-    assert(LakeSink.commitManifest(dir, 1L, 0L, Seq("seg_b0"),
-      schemaJson = Some(df.schema.json)))
+    assert(LakeSink.commitManifest(dir, LakeSink.Manifest(1L, 0L, Seq("seg_b0"),
+      schemaJson = Some(df.schema.json))))
     val m1 = LakeSink.readManifest(dir)
     assert(m1.schemaV === 0L)
     assert(m1.schemaJson === Some(df.schema.json),

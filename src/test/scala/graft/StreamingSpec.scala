@@ -449,10 +449,11 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         .write.mode("overwrite").parquet(s"$out/$name")
     // v1: two small segments; v2: +1 segment; v3: compaction swap
     seg("seg_b0", 1, 2); seg("seg_b1", 3)
-    assert(LakeSink.commitManifest(out, 1, 0, Seq("seg_b0")))
-    assert(LakeSink.commitManifest(out, 2, 1, Seq("seg_b0", "seg_b1")))
+    assert(LakeSink.commitManifest(out, LakeSink.Manifest(1, 0, Seq("seg_b0"))))
+    assert(LakeSink.commitManifest(out,
+      LakeSink.Manifest(2, 1, Seq("seg_b0", "seg_b1"))))
     seg("seg_c1", 1, 2, 3)
-    assert(LakeSink.commitManifest(out, 3, 1, Seq("seg_c1")))
+    assert(LakeSink.commitManifest(out, LakeSink.Manifest(3, 1, Seq("seg_c1"))))
     // an orphan from a crashed replay: on disk, in no manifest
     seg("seg_b9", 99)
     // time travel before vacuum: every version reads its own world
@@ -481,11 +482,12 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       "already-committed version returns false and does not clobber") {
     import graft.streaming.LakeSink
     val out = java.nio.file.Files.createTempDirectory("graft_lake4").toString
-    assert(LakeSink.commitManifest(out, 1, 0, Seq("seg_b0")))
+    assert(LakeSink.commitManifest(out, LakeSink.Manifest(1, 0, Seq("seg_b0"))))
     // the replay/lost-race case: same version, DIFFERENT content —
     // must be rejected, not silently replace the winner (rename(2)
     // would replace; link(2) fails with EEXIST)
-    assert(!LakeSink.commitManifest(out, 1, 7, Seq("seg_evil")))
+    assert(!LakeSink.commitManifest(out,
+      LakeSink.Manifest(1, 7, Seq("seg_evil"))))
     val m = LakeSink.readManifest(out)
     assert(m.version == 1 && m.maxB == 0 && m.segs == Seq("seg_b0"),
       s"losing commit clobbered the manifest: $m")
@@ -495,7 +497,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val names = new scala.collection.mutable.ArrayBuffer[String]
     while (litter.hasNext) names += litter.next().getFileName.toString
     assert(names.forall(!_.endsWith(".inprogress")), names.mkString(","))
-    assert(LakeSink.commitManifest(out, 2, 1, Seq("seg_b0", "seg_b1")))
+    assert(LakeSink.commitManifest(out,
+      LakeSink.Manifest(2, 1, Seq("seg_b0", "seg_b1"))))
     assert(LakeSink.readManifest(out).version == 2)
   }
 
@@ -507,7 +510,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // protocol: batch 3 replays after its compaction already committed
     // (checkpoint died before committing) — maxb must reject the re-add
     val out = java.nio.file.Files.createTempDirectory("graft_lake2").toString
-    assert(LakeSink.commitManifest(out, 1, 3, Seq("seg_c3")))
+    assert(LakeSink.commitManifest(out, LakeSink.Manifest(1, 3, Seq("seg_c3"))))
     Seq((1L, "a")).toDF("event_id", "x")
       .write.mode("overwrite").parquet(s"$out/seg_c3")
     // replayed ingest of batch 2: segment rewritten on disk, then the
