@@ -1554,20 +1554,22 @@ object LakeSink {
     else Some(checks.map(_.get))
   }
 
+  /** One Hadoop configuration for every footer read: building one per
+    * call re-parses the default XML resources. Only read here. */
+  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+
   /** Live row count of a segment from its parquet FOOTERS — a
     * driver-side metadata read (no Spark job), used when a proof
     * drops a segment the planner never scanned. */
-  private def segmentFooterRows(outDir: String, seg: String): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+  private def segmentFooterRows(outDir: String, seg: String): Long =
     listDir(Paths.get(outDir, seg))
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map { p =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toUri), conf)
+          new org.apache.hadoop.fs.Path(p.toUri), footerConf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-  }
 
   /** ALL safe prune hints for `cond` over the stats-tracked columns —
     * the r11 generalization of [[inferPruneHint]]: numeric ranges,
@@ -4683,7 +4685,7 @@ object LakeSink {
     // files are deleted before the error and were never manifest-
     // visible (the same invisibility any staged write relies on).
     val (segStats, rows) = writeSegmentObserved(spark, outDir, m, df, seg,
-      s"appendSegment to $outDir violates expectation(s)")
+      Some(s"appendSegment to $outDir violates expectation(s)"))
     writeSegmentBlooms(spark, outDir, seg, m.bloomCols, Some(rows))
     // An append commutes with ANY concurrent commit that leaves the
     // schema, expectation set, and our txn state alone (it reads no
@@ -4704,23 +4706,27 @@ object LakeSink {
     * the tracked-column stats, and the row count as `observe` metrics
     * INSIDE the write job — one Catalyst action where the pre-r18
     * path paid three (gate aggregate, write, stats re-read) plus a
-    * footer read at the commit gate. Expectation violations delete
-    * the just-written (never manifest-visible) directory and refuse
-    * loud with the caller's message head (`errHead`, the text before
-    * the per-check counts) — identical wording to the pre-fusion
-    * gates. Returns the stats map
-    * (keyed by segment, physical column names — empty when the lake
-    * tracks nothing) and the row count for `addedRows`. */
+    * footer read at the commit gate. `gate` = Some(errHead) checks the
+    * table's expectations: violations delete the just-written (never
+    * manifest-visible) directory and refuse loud with the caller's
+    * message head (the text before the per-check counts) — identical
+    * wording to the pre-fusion gates. None writes rows that are already
+    * committed (compaction) and checks nothing. Stats cover the lake's
+    * tracked columns plus the caller's `statsCols` (PHYSICAL names).
+    * Returns the stats map (keyed by segment, physical column names —
+    * empty when nothing is tracked) and the row count for `addedRows`. */
   private def writeSegmentObserved(spark: SparkSession, outDir: String,
-      m: Manifest, df: DataFrame, seg: String, errHead: String)
+      m: Manifest, df: DataFrame, seg: String, gate: Option[String],
+      statsCols: Seq[String] = Nil)
       : (Map[String, Map[String, ColStat]], Long) = {
     import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, when}
     import org.apache.spark.sql.types.{LongType, StringType}
-    val checks = m.expects.toSeq.sortBy(_._1)
+    val checks = if (gate.isEmpty) Nil else m.expects.toSeq.sortBy(_._1)
+    val tracked = (m.trackedCols ++ statsCols).distinct
     // manifest stats live under PHYSICAL names; `df` speaks logical —
     // aggregate on the logical side, re-key the results
     val trackedTyped: Seq[(String, String, Boolean)] =
-      m.trackedCols.flatMap { p =>
+      tracked.flatMap { p =>
         val lOpt = if (m.colmap.isEmpty) Some(p) else m.logicalOf(p)
         lOpt.flatMap(l => df.schema.fields.collectFirst {
           case f if f.name == l &&
@@ -4749,7 +4755,7 @@ object LakeSink {
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(s"$outDir/$seg"))
     require(bad.isEmpty,
-      s"$errHead: " +
+      s"${gate.getOrElse("")}: " +
         bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
     val st = trackedTyped.zipWithIndex.flatMap {
       case ((p, _, isLong), i) =>
@@ -4764,7 +4770,7 @@ object LakeSink {
           case _ => None // all-NULL column records no bounds
         }
     }.toMap
-    (if (m.trackedCols.isEmpty) Map.empty[String, Map[String, ColStat]]
+    (if (tracked.isEmpty) Map.empty[String, Map[String, ColStat]]
      else Map(seg -> st),
       got("__rows").asInstanceOf[Long])
   }
@@ -5085,7 +5091,7 @@ object LakeSink {
             // (the batch already passed the gate above)
             val seg = f"seg_r${m.version + 1}%010d_ins_$nonce"
             val (stats, n) = writeSegmentObserved(spark, outDir, m, src,
-              seg, s"replaceWhere to $outDir violates expectation(s)")
+              seg, Some(s"replaceWhere to $outDir violates expectation(s)"))
             inserted = n
             if (inserted == 0L)
               org.apache.commons.io.FileUtils.deleteQuietly(
@@ -5639,7 +5645,7 @@ object LakeSink {
         // no write pass is abandoned mid-flight).
         val insTry = scala.util.Try(writeSegmentObserved(spark, outDir, m,
           inserts, insSeg,
-          s"MERGE into $outDir would write rows violating expectation(s)"))
+          Some(s"MERGE into $outDir would write rows violating expectation(s)")))
         touchedWork.foreach(f => scala.concurrent.Await.result(
           f, scala.concurrent.duration.Duration.Inf))
         val (insStats, inserted) = insTry.get
@@ -6265,8 +6271,8 @@ object LakeSink {
           // awaited before any shared bookkeeping or a gate refusal
           val insTry = scala.util.Try(writeSegmentObserved(spark, outDir,
             m, insPost.drop("__mc"), insSeg,
-            s"MERGE into $outDir would insert rows violating " +
-              "expectation(s)"))
+            Some(s"MERGE into $outDir would insert rows violating " +
+              "expectation(s)")))
           touchedWork.foreach(f => scala.concurrent.Await.result(
             f, scala.concurrent.duration.Duration.Inf))
           val (insStats, insN) = insTry.get
@@ -6321,6 +6327,12 @@ object LakeSink {
 
   /** Start the ingest-with-maintenance stream. Every `compactEvery`
     * batches, live b-segments are compacted into `targetFiles` files.
+    * Each batch is written through the fused observed write: the
+    * table's expectations gate it (a violating batch fails the query
+    * and commits nothing), and its stats over `statsCols` and its row
+    * count come back from the write itself, so the commit reads no
+    * footers. Compaction observes the count (and stats) of the rows it
+    * rewrites but does not re-check them: they are already committed.
     * `beforeMaintenanceCommit` is the crash-injection seam: it runs
     * AFTER the compacted segment is fully written and BEFORE the
     * manifest commit that makes it live — the exact window the
@@ -6334,45 +6346,45 @@ object LakeSink {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
         val seg = s"seg_b$batchId"
-        // mW only keys the write's column names (the mapping changes
-        // via rare DDL, never mid-batch); the commit loop below reads
-        // its own fresh tips
+        // A replayed batch is already live, or already compacted away:
+        // re-adding it would duplicate rows the c-segment holds, so any
+        // orphan directory is dropped instead. A live segment is never
+        // rewritten.
+        def replayed(m: Manifest): Boolean =
+          m.segs.contains(seg) || (batchId <= m.maxB && {
+            org.apache.commons.io.FileUtils.deleteQuietly(
+              new java.io.File(s"$outDir/$seg"))
+            true
+          })
+        // mW keys the write's column names, expectations and tracked
+        // columns (all change via rare DDL, never mid-batch); the
+        // commit loop below reads its own fresh tips
         val mW = readManifest(outDir)
-        val batchPhys = physicalize(batch, mW)
-        batchPhys.write.mode("overwrite").parquet(s"$outDir/$seg")
-        // Per-batch stats from the just-written segment (statsCols
-        // names the BIGINT columns to track, e.g. the event-time
-        // epoch — time-ordered micro-batches each cover a narrow
-        // range, exactly the layout that makes pruning effective).
-        // Stats key PHYSICAL names (they follow the bytes).
-        val bstats =
-          if (statsCols.isEmpty) Map.empty[String, ColStat]
-          else segmentStats(
-            spark.read.schema(batchPhys.schema)
-              .parquet(s"$outDir/$seg"),
+        if (!replayed(mW)) {
+          // statsCols names the BIGINT columns to track, e.g. the
+          // event-time epoch — time-ordered micro-batches each cover a
+          // narrow range, exactly the layout that makes pruning
+          // effective. Stats key PHYSICAL names (they follow the bytes).
+          val (bstats, rows) = writeSegmentObserved(spark, outDir, mW,
+            batch, seg,
+            Some(s"compacting ingest of batch $batchId to $outDir " +
+              "violates expectation(s)"),
             statsCols.map(mW.physicalOf))
-        writeSegmentBlooms(spark, outDir, seg, mW.bloomCols)
-        // ingest commit loop: retry on version race (replay in practice)
-        var done = false
-        while (!done) {
-          val m = readManifest(outDir)
-          done =
-            if (m.segs.contains(seg)) true // replayed, already live
-            else if (batchId <= m.maxB) {
-              // replayed AND already compacted away: re-adding would
-              // duplicate rows the c-segment holds — drop the orphan
-              org.apache.commons.io.FileUtils.deleteQuietly(
-                new java.io.File(s"$outDir/$seg"))
-              true
-            } else commitNext(outDir, m,
+          writeSegmentBlooms(spark, outDir, seg, mW.bloomCols, Some(rows))
+          // ingest commit loop: retry on version race (replay in practice)
+          var done = false
+          while (!done) {
+            val m = readManifest(outDir)
+            done = replayed(m) || commitNext(outDir, m,
               // copy, not positional construction: cumulative state
               // (dv, schema, txns) rides through; per-version
               // annotations reset (see addExpectation's note)
               m.copy(version = m.version + 1, maxB = batchId,
                 segs = m.segs :+ seg,
-                stats =
-                  if (bstats.isEmpty) m.stats else m.stats + (seg -> bstats),
+                stats = m.stats ++ bstats.filter(_._2.nonEmpty),
+                segRows = m.segRows + (seg -> rows),
                 cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true))
+          }
         }
         if (batchId % compactEvery == (compactEvery - 1)) {
           val m = readManifest(outDir)
@@ -6381,23 +6393,16 @@ object LakeSink {
             val cseg = s"seg_c$batchId"
             // DV-reconciling read: a b-segment that took a point delete
             // between ingest and compaction must not resurrect its rows
-            val csegPhys = physicalize(
-              readSegments(spark, outDir, m, bsegs)
-                .repartition(targetFiles), m)
-            csegPhys.write.mode("overwrite").parquet(s"$outDir/$cseg")
-            val cstats =
-              if (statsCols.isEmpty) Map.empty[String, ColStat]
-              else segmentStats(
-                spark.read.schema(csegPhys.schema)
-                  .parquet(s"$outDir/$cseg"),
-                statsCols.map(m.physicalOf))
-            writeSegmentBlooms(spark, outDir, cseg, m.bloomCols)
+            val (cstats, crows) = writeSegmentObserved(spark, outDir, m,
+              readSegments(spark, outDir, m, bsegs).repartition(targetFiles),
+              cseg, None, statsCols.map(m.physicalOf))
+            writeSegmentBlooms(spark, outDir, cseg, m.bloomCols, Some(crows))
             beforeMaintenanceCommit(batchId)
             if (commitNext(outDir, m,
                 m.copy(version = m.version + 1,
                   segs = m.segs.filterNot(bsegs.contains) :+ cseg,
-                  stats = (if (cstats.isEmpty) m.stats
-                    else m.stats + (cseg -> cstats)) -- bsegs,
+                  stats = m.stats -- bsegs ++ cstats.filter(_._2.nonEmpty),
+                  segRows = m.segRows -- bsegs + (cseg -> crows),
                   cdcSegs = Nil, cdcDropSegs = Nil, dataChange = false,
                   dv = m.dv -- bsegs))) {
               // now-orphaned inputs: invisible to every reader; removal

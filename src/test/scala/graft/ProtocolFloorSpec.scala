@@ -330,4 +330,39 @@ class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
         "counts+gate aggregate and the one staged write")
     assert(LakeSink.readTable(spark, dir).count() === 2L)
   }
+
+  test("compacting ingest: observed row counts for b- and c-segments, " +
+      "one action per ingest commit") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft_floor_ingest")
+      .toString
+    val batches = (0 until 6).map(i => (0 until 3 + i).map(j =>
+      (i * 100L + j, j.toLong)))
+    val input = MemoryStream[(Long, Long)]
+    val acts = actionsIn {
+      val q = LakeSink.startCompactingIngest(input.toDF().toDF("k", "v"),
+        s"$base/lake", s"$base/ckpt", compactEvery = 4, statsCols = Seq("k"))
+      try batches.foreach { b =>
+        input.addData(b: _*); q.processAllAvailable()
+      } finally q.stop()
+    }
+    // six observed batch writes plus the one observed compaction write:
+    // no stats re-read, no count action (the streaming engine's own
+    // executions do not reach a session listener)
+    assert(acts === batches.size + 1,
+      s"compacting ingest ran $acts actions for ${batches.size} batches " +
+        "and one compaction — expected one observed write each")
+    val dir = s"$base/lake"
+    val m = LakeSink.readManifest(dir)
+    assert(m.segs === Seq("seg_c3", "seg_b4", "seg_b5"))
+    m.segs.foreach { seg =>
+      val onDisk = spark.read.parquet(s"$dir/$seg")
+      assert(m.segRows.get(seg) === Some(onDisk.count()),
+        s"$seg: recorded row count differs from its files")
+      assert(m.stats(seg) === LakeSink.segmentStats(onDisk, Seq("k")),
+        s"$seg: observed stats differ from a from-disk recompute")
+    }
+    assert(m.segRows("seg_c3") === batches.take(4).map(_.size).sum)
+  }
 }

@@ -439,6 +439,39 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally q2.stop()
   }
 
+  test("compacting lake sink: a batch violating an expectation fails the " +
+      "query loud, commits nothing and leaves no segment dir") {
+    import graft.streaming.LakeSink
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_lake_exp").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_lake_exp_ckpt").toString
+    val input = MemoryStream[Event]
+    val q = LakeSink.startCompactingIngest(input.toDF(), out, ckpt,
+      compactEvery = 2)
+    try {
+      input.addData(ev("2024-01-01 10:00:00", user = 1))
+      q.processAllAvailable()
+      // "every writer sees it": the contract lives with the table
+      LakeSink.addExpectation(spark, out, "user_pos", "user_id >= 0")
+      val v0 = LakeSink.readManifest(out).version
+      input.addData(ev("2024-01-01 10:01:00", user = 2),
+        ev("2024-01-01 10:02:00", user = -7))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("user_pos (1 rows)")), msgs.mkString(" | "))
+      val m = LakeSink.readManifest(out)
+      assert(m.version === v0, "a refused batch moved the manifest")
+      assert(m.segs === Seq("seg_b0"))
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "seg_b1")),
+        "a refused batch must not leave its segment dir behind")
+      assert(LakeSink.readTable(spark, out).count() === 1L)
+    } finally q.stop()
+  }
+
   test("lake time travel + vacuum: retained versions read exactly, " +
       "orphans and stale history go away") {
     import graft.streaming.LakeSink
